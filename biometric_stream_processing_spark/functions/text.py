@@ -1,8 +1,8 @@
 """Text-analysis column functions for large-scale training-data
 pipelines (beyond-reference surface, BASELINE.json north star):
-tokenization, stopword stats, shingling, minhash signatures, simhash
-fingerprints. Everything is built-in Catalyst array/string expressions
-— no Python on the hot path, so these run inside whole-stage codegen
+tokenization, token counts, shingling, simhash fingerprints.
+Everything is built-in Catalyst array/string expressions — no Python
+on the hot path, so these run inside whole-stage codegen
 and scale linearly with input splits.
 
 Engine-parity notes (for the DuckDB oracles): hashing is md5 (same hex
@@ -20,8 +20,6 @@ from pyspark.sql import functions as F
 # Small English stopword list (public-domain common words).
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
-HEX = "0123456789abcdef"
-
 
 def words(col: Column) -> Column:
     """Whitespace tokenization with empties dropped — parity form:
@@ -33,15 +31,6 @@ def word_count(col: Column) -> Column:
     return F.size(words(col))
 
 
-def distinct_word_count(col: Column) -> Column:
-    return F.size(F.array_distinct(words(col)))
-
-
-def stopword_count(col: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
-    return F.size(F.filter(words(col), lambda w: F.array_contains(sw, w)))
-
-
 def bpe_ish_token_count(col: Column) -> Column:
     """Regex token count: alpha runs, digit runs, and single
     non-alphanumerics — a BPE-pretokenizer approximation using only
@@ -49,12 +38,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(
         F.regexp_extract_all(col, F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), F.lit(0))
     )
-
-
-def fingerprint(col: Column) -> Column:
-    """Document fingerprint: md5 over the normalized (whitespace-
-    collapsed) token stream."""
-    return F.md5(F.concat_ws(" ", words(col)))
 
 
 def shingles(ws: Column, n: int = 2) -> Column:
@@ -79,23 +62,6 @@ def shingles(ws: Column, n: int = 2) -> Column:
     return F.when(m >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def minhash_sig(sh: Column, num_hashes: int) -> list[Column]:
-    """MinHash signature: ONE md5 per shingle, sliced into
-    ``num_hashes`` independent 4-hex-digit sub-hashes (md5's digits
-    are independently uniform), each minimized lexicographically.
-    8× cheaper than hashing per seed; 16-bit per-hash space is ample
-    for banded LSH (bands concatenate 2 sub-hashes → 32 bits)."""
-    if num_hashes > 8:
-        raise ValueError("md5 slicing supports at most 8 sub-hashes")
-    hashed = F.transform(sh, F.md5)
-    return [
-        F.array_min(
-            F.transform(hashed, lambda h: F.substring(h, 4 * s + 1, 4))
-        ).alias(f"m{s}")
-        for s in range(num_hashes)
-    ]
 
 
 def simhash16(ws: Column) -> Column:

@@ -216,15 +216,3 @@ def asof_join_cogroup(
         .cogroup(right.groupBy(key))
         .applyInPandas(lambda l, r: merge(l, r), schema=schema)
     )
-
-
-def cogroup_lists(
-    df: DataFrame, keys: list[str], value_col: str, sorted_output: bool = True
-) -> DataFrame:
-    """J3 (Beam CoGroupByKey shape): group values into an array per
-    key. Kept for parity; prefer flag/count aggregation — per-key
-    arrays are the reference's scalability flaw (SURVEY §7.4)."""
-    agg = F.collect_list(value_col)
-    if sorted_output:
-        agg = F.sort_array(agg)
-    return df.groupBy(*keys).agg(agg.alias(f"{value_col}s"))

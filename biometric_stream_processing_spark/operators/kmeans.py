@@ -200,7 +200,7 @@ def assignment_with_cos(
     """The full (id, cell, cos) final assignment — the single map
     stage both index artifacts derive from: the cell layout
     (``assign_cells``' projection) and the quantizer-quality report
-    (``cell_quality``'s aggregation input). A real index build
+    (``quality_from_assignment``'s input). A real index build
     computes this pass ONCE and ships both; callers running both
     should persist this frame (see
     ``plans/documents_ops.shared_kmeans_assignment``)."""
@@ -213,29 +213,15 @@ def assignment_with_cos(
     )
 
 
-def cell_quality(
-    vectors: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Quantizer EVALUATION for a trained model: per final cell, the
-    member count and the mean cosine of members to their centroid —
-    the compactness metric an ANN index build reports (low mean
-    cosine ⇒ the cell is too coarse; recall will suffer there).
-
-    Determinism: the member cosine is the same row-local array fold
-    the assignment uses; it is rounded at 6 dp BEFORE an exact
-    DECIMAL sum (order-independent), and the mean divides by the
-    exact count. One map stage + one k-row aggregation."""
-    return quality_from_assignment(
-        assignment_with_cos(vectors, cents, vec_col)
-    )
-
-
 def quality_from_assignment(assigned: DataFrame) -> DataFrame:
-    """``cell_quality``'s k-row aggregation over a prebuilt
-    (id, cell, _cos) assignment frame — lets the expensive map stage
-    be shared with the cell-layout consumer."""
+    """Quantizer evaluation for a trained model: per final cell, the
+    member count and the mean cosine of members to their centroid,
+    over a prebuilt (id, cell, _cos) assignment frame — lets the
+    expensive map stage be shared with the cell-layout consumer.
+
+    Determinism: the member cosine is rounded at 6 dp BEFORE an exact
+    DECIMAL sum (order-independent), and the mean divides by the
+    exact count. One k-row aggregation."""
     return assigned.groupBy("cell").agg(
         F.count("*").alias("n_members"),
         F.round(

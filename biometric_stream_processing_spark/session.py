@@ -17,6 +17,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _ascii_digits(value: str | None) -> str | None:
+    """``value`` if it is a non-empty run of ASCII digits, else None.
+    str.isdigit() alone accepts non-ASCII Unicode digits (e.g. '٤'),
+    which would pass through verbatim and fail conf parsing at
+    session start."""
+    return value if value and value.isascii() and value.isdigit() else None
+
+
 DEFAULT_CONFS: dict[str, str] = {
     # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
     "spark.sql.adaptive.enabled": "true",
@@ -51,21 +60,19 @@ DEFAULT_CONFS: dict[str, str] = {
     # unset). Every harness that TIMES queries pins this knob
     # explicitly (bench.py: 4; tests: 8), so bench numbers are
     # unaffected; this sizes the untimed/driver-session paths right.
-    # isascii() guard (round-17 advice): str.isdigit() alone accepts
-    # non-ASCII Unicode digits (e.g. '٤'), which would pass through
-    # verbatim and fail conf parsing at session start.
+    # Both env values must be ASCII digits (``_ascii_digits``); a junk
+    # value falls through to the next source instead of failing at
+    # session start.
     # CAPTURED AT MODULE-IMPORT TIME (round-17 advice, documented
     # choice): callers that pass an explicit master= (tests' local[8])
     # or mutate the env after import get this import-time value, not
     # a master-derived one — every TIMED harness therefore pins the
     # knob explicitly (bench.py/check_oracle: 4; tests/conftest: 8),
     # and library users who pin master= should pin extra_confs too.
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        (lambda c: c if (c.isascii() and c.isdigit())
-         else str(os.cpu_count() or 8))(
-            os.environ.get("SPARK_GRAFT_CPUS", "")
-        ),
+    "spark.sql.shuffle.partitions": (
+        _ascii_digits(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
+        or _ascii_digits(os.environ.get("SPARK_GRAFT_CPUS"))
+        or str(os.cpu_count() or 8)
     ),
     "spark.ui.enabled": "false",
     # GC collector (round 17, measured): JDK-17 Spark defaults to G1;

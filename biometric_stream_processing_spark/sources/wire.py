@@ -3,16 +3,20 @@ are JSON lines with snake_case keys, epoch-millis timestamps
 (`{"user_id":12345,"heart_rate":200,"timestamp":1491423892000}` —
 FIXTURES.md §1), fed from in-memory queues or Kafka topics. Spark
 equivalents: JSON file/stream sources with explicit schemas (never
-inference in production) and the Kafka connector.
+inference in production).
 
-Kafka constructors are untestable here (no broker or kafka jars in
-the environment) but are the exact production wiring; everything
-downstream of the source is source-agnostic.
+The Kafka adapter is its broker-independent logic only:
+``parse_kafka_value`` (value bytes → typed rows) and
+``to_kafka_records`` (typed rows → key/value records). The Kafka
+connector itself (``readStream.format("kafka")`` /
+``writeStream.format("kafka")``) is not wired here; a deployment puts
+it on either side of these two functions. Everything downstream of the
+source is source-agnostic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,9 +58,9 @@ def parse_kafka_value(
 ) -> DataFrame:
     """The broker-independent half of S4: a frame with a binary
     ``value`` column (Kafka wire shape) → typed event rows with
-    event-time ``ts``. This is the exact chain ``read_kafka_json``
-    applies to the connector's output — unit-testable by synthesizing
-    ``value`` bytes (`JsonSerde.scala:24-26` deserialization)."""
+    event-time ``ts``. Apply it to the Kafka connector's output; it is
+    unit-testable by synthesizing ``value`` bytes (`JsonSerde.scala:24-26`
+    deserialization)."""
     parsed = raw.select(
         F.from_json(
             F.col("value").cast("string"), schema, options or {}
@@ -71,45 +75,4 @@ def to_kafka_records(df: DataFrame, key_col: str | None = "user_id") -> DataFram
     return df.select(
         (F.col(key_col).cast("string") if key_col else F.lit(None)).alias("key"),
         F.to_json(F.struct(*df.columns)).alias("value"),
-    )
-
-
-def read_kafka_json(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    schema: T.StructType,
-    starting_offsets: str = "earliest",
-) -> DataFrame:  # pragma: no cover - needs a broker + kafka jars
-    """S4 (`KafkaBiometricAlertStreamProcessor.scala:29-30`): Kafka
-    topic → typed event stream. ``value`` bytes are the JSON wire
-    format; parse with the explicit schema (PERMISSIVE; pass
-    mode=FAILFAST via from_json options for `JsonSerde.scala:24-26`
-    strictness)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_kafka_value(raw, schema)
-
-
-def write_kafka_json(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = "user_id",
-):  # pragma: no cover - needs a broker + kafka jars
-    """S5: typed rows → JSON wire format → Kafka sink (exactly-once
-    via checkpoint; `to_json(struct(*))` is `JsonSerde.scala:40-47`)."""
-    out = to_kafka_records(df, key_col)
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

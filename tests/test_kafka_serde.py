@@ -1,9 +1,9 @@
 """Broker-free validation of the Kafka wire path (SURVEY §2.1 S4/S5).
 
-The connector itself needs a broker + kafka jars (absent here), but
-everything the connector wraps — value bytes → typed rows
-(`parse_kafka_value`, the chain `read_kafka_json` applies,
-`JsonSerde.scala:24-26`) and typed rows → (key, value) records
+The connector itself is not wired in this package (it needs a broker
+and the kafka jars), but everything it would wrap — value bytes →
+typed rows (`parse_kafka_value`, `JsonSerde.scala:24-26`) and typed
+rows → (key, value) records
 (`to_kafka_records`, `JsonSerde.scala:40-47`) — is pure DataFrame
 logic over a binary ``value`` column, exercised here by synthesizing
 exactly the bytes Kafka would deliver (FIXTURES.md §1 wire format).

@@ -8,7 +8,8 @@ environment — no SparkSession is launched).
    scale-adaptivity fix: a local[4] driver session must not default
    to 32 shuffle partitions on a 32-core box.
 2. SPARK_GRAFT_SHUFFLE_PARTITIONS (the adversarial-sweep knob)
-   still beats everything.
+   still beats everything — when it is ASCII digits; a junk value
+   falls back to the derived default.
 3. Non-numeric / unset SPARK_GRAFT_CPUS ("*" = all cores) falls back
    to os.cpu_count() — the pre-round-17 behavior, unchanged.
 4. The ParallelGC local-JVM default is present and the
@@ -55,6 +56,18 @@ def test_shuffle_env_override_still_wins():
     got = _defaults(SPARK_GRAFT_CPUS="11",
                     SPARK_GRAFT_SHUFFLE_PARTITIONS="7")
     assert got["shuffle"] == "7"
+
+
+def test_shuffle_env_override_rejects_junk():
+    """A junk or non-ASCII SPARK_GRAFT_SHUFFLE_PARTITIONS must not
+    reach spark.sql.shuffle.partitions (it would fail conf parsing at
+    session start); the master-derived default applies instead."""
+    for junk in ("", "auto", "-3", "7.5", "٧"):
+        assert _defaults(SPARK_GRAFT_CPUS="11",
+                         SPARK_GRAFT_SHUFFLE_PARTITIONS=junk)["shuffle"] == "11"
+    assert _defaults(SPARK_GRAFT_SHUFFLE_PARTITIONS="auto")["shuffle"] == str(
+        os.cpu_count() or 8
+    )
 
 
 def test_shuffle_falls_back_to_cpu_count_when_master_unpinned():

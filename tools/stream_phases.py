@@ -94,42 +94,46 @@ def main() -> int:
     # access inside function bodies EXCEPT the sink imports inside
     # streaming_user_gapfill / streaming_dedup_merge, which bind at
     # call time from the sinks module — patched above.
+    try:
+        if os.path.isdir(warm_sf):
+            try:
+                qs[names[0]](spark, warm_sf).count()
+            except Exception as e:
+                print(f"warm-up {names[0]} <failed: {e!r}>")
 
-    if os.path.isdir(warm_sf):
-        qs[names[0]](spark, warm_sf).count()
-
-    hdr = (f"{'entry':<36} {'wall':>6} {'batches':>7} "
-           f"{'b0 trig/add ms':>15} {'bN trig/add ms':>15} {'other s':>8}")
-    print(hdr)
-    print("-" * len(hdr))
-    for name in names:
-        progresses.clear()
-        t0 = time.time()
-        try:
-            qs[name](spark, sf_dir).count()
-        except Exception as e:
-            print(f"{name:<36} <failed: {e!r}>")
-            continue
-        wall = time.time() - t0
-        byb: dict[int, dict] = {}
-        for p in progresses:
-            d = p.durationMs or {}
-            byb[p.batchId] = {
-                "trig": d.get("triggerExecution", 0),
-                "add": d.get("addBatch", 0),
-            }
-        bids = sorted(byb)
-        trig_total = sum(b["trig"] for b in byb.values())
-        b0 = byb.get(bids[0]) if bids else {"trig": 0, "add": 0}
-        bn = byb.get(bids[-1]) if bids else {"trig": 0, "add": 0}
-        print(
-            f"{name:<36} {wall:>6.2f} {len(bids):>7} "
-            f"{b0['trig']:>7}/{b0['add']:<7} "
-            f"{bn['trig']:>7}/{bn['add']:<7} "
-            f"{wall - trig_total / 1000.0:>8.2f}"
-        )
-    P.run_stream_to_memory = real_mem
-    S.start_with_foreach_batch = real_fb
+        hdr = (f"{'entry':<36} {'wall':>6} {'batches':>7} "
+               f"{'b0 trig/add ms':>15} {'bN trig/add ms':>15} {'other s':>8}")
+        print(hdr)
+        print("-" * len(hdr))
+        for name in names:
+            progresses.clear()
+            t0 = time.time()
+            try:
+                qs[name](spark, sf_dir).count()
+            except Exception as e:
+                print(f"{name:<36} <failed: {e!r}>")
+                continue
+            wall = time.time() - t0
+            byb: dict[int, dict] = {}
+            for p in progresses:
+                d = p.durationMs or {}
+                byb[p.batchId] = {
+                    "trig": d.get("triggerExecution", 0),
+                    "add": d.get("addBatch", 0),
+                }
+            bids = sorted(byb)
+            trig_total = sum(b["trig"] for b in byb.values())
+            b0 = byb.get(bids[0]) if bids else {"trig": 0, "add": 0}
+            bn = byb.get(bids[-1]) if bids else {"trig": 0, "add": 0}
+            print(
+                f"{name:<36} {wall:>6.2f} {len(bids):>7} "
+                f"{b0['trig']:>7}/{b0['add']:<7} "
+                f"{bn['trig']:>7}/{bn['add']:<7} "
+                f"{wall - trig_total / 1000.0:>8.2f}"
+            )
+    finally:
+        P.run_stream_to_memory = real_mem
+        S.start_with_foreach_batch = real_fb
     return 0
 
 
