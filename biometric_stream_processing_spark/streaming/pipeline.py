@@ -32,6 +32,12 @@ timestamp — both watermark-GC'd. At 100 TB/day the knobs are
 RocksDB state store provider
 (``spark.sql.streaming.stateStore.providerClass``); nothing here
 holds per-event state (the reference's list-concat flaw, avoided).
+Live micro-batches pay a fixed commit cost per batch (state-store
+deltas, offset and commit logs) whatever their size.
+``get_spark`` sessions write those files through the FileSystem-based
+checkpoint manager (``session.DEFAULT_CONFS``), which keeps the local
+filesystem from forking ``readlink`` per file; a host session on HDFS
+keeps Spark's atomic ``FileContext`` default.
 """
 
 from __future__ import annotations
@@ -76,11 +82,11 @@ def pinned_shuffle_partitions(spark: SparkSession, n: int = 4):
     can no longer leave the shared session pinned at the streaming
     state-parallelism value for every subsequent batch query.
 
-    Why 4: state-store overhead scales with partition count; at test
-    scale 4 partitions minimize micro-batch commit cost (measured:
-    4 ≈ 2.1 s, 8 ≈ 2.7 s, 32 ≈ 3× worse at sf0.1). A 1000-executor
-    deployment raises this with cluster size — it is the state
-    parallelism knob, locked into the checkpoint at first run."""
+    Why 4: every stateful operator writes one delta file per state
+    partition per micro-batch, so at test scale few partitions keep
+    the commit cost down. A 1000-executor deployment raises this with
+    cluster size — it is the state parallelism knob, locked into the
+    checkpoint at first run."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

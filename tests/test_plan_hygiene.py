@@ -779,10 +779,14 @@ def test_duplicate_spans_gram_build_is_codegen_and_binary_keyed(spark):
     unhex(md5(...)): 16 bytes instead of a 32-char hex string on the
     one corpus-sized exchange and its window sort (equality classes
     unchanged — unhex is injective on md5 output)."""
+    import re
+
     from biometric_stream_processing_spark.plans import corpus_ops
 
     p = _plan(corpus_ops.doc_duplicate_spans(spark, SF_DIR))
-    assert "unhex(md5(cast(concat_ws(" in p, p
+    # the implicit cast to binary renders differently across Spark
+    # versions; the binary md5 key over concat_ws is what matters
+    assert re.search(r"unhex\(md5\((cast\()?concat_ws\(", p), p
     # the old shape evaluated the gram concat inside the shingles()
     # transform lambda; the explode-first form must not
     assert "transform(arrays_zip" not in p, p

@@ -1,7 +1,8 @@
 """Round-17 optimization-round pins for the session-factory defaults
-(`session.DEFAULT_CONFS` is computed at import time from env, so each
-case re-imports the module in a subprocess with a controlled
-environment — no SparkSession is launched).
+(`session.DEFAULT_CONFS` is computed at import time from env, so cases
+1-4 re-import the module in a subprocess with a controlled
+environment and launch no SparkSession; case 5 uses the tests'
+session).
 
 1. Shuffle partitions derive from the MASTER's cores (numeric
    SPARK_GRAFT_CPUS), not the machine's cpu_count — the guide-§2
@@ -14,6 +15,9 @@ environment — no SparkSession is launched).
    to os.cpu_count() — the pre-round-17 behavior, unchanged.
 4. The ParallelGC local-JVM default is present and the
    SPARK_GRAFT_DRIVER_JAVA_OPTS env hook overrides or clears it.
+5. Streaming checkpoints of ``get_spark`` sessions go through the
+   FileSystem-based checkpoint file manager, and ``tune_session``
+   leaves a host session's choice alone.
 """
 
 from __future__ import annotations
@@ -96,3 +100,31 @@ def test_shuffle_rejects_non_ascii_digit_cpus():
     assert _defaults(SPARK_GRAFT_CPUS="٤")["shuffle"] == str(
         _os.cpu_count() or 8
     )
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_checkpoint_manager_is_filesystem_based_and_host_scoped(
+    spark, tmp_path
+):
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    assert manager.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    # a host session keeps Spark's default: tune_session must not set it
+    from biometric_stream_processing_spark.session import tune_session
+
+    prev = spark.conf.get(_CKPT_MANAGER_KEY)
+    try:
+        spark.conf.unset(_CKPT_MANAGER_KEY)
+        tune_session(spark)
+        assert spark.conf.get(_CKPT_MANAGER_KEY, None) is None
+    finally:
+        spark.conf.set(_CKPT_MANAGER_KEY, prev)
