@@ -53,7 +53,7 @@ machine stands on that disorder class:
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -83,50 +83,68 @@ def _qualifying_wstarts(
     return sorted(hr_w & bp_w)
 
 
+def leading_throttle_step(
+    last_alert: "int | None", ev_es: "Iterable[int]",
+    ev_hr: "Iterable[bool]", pdfs: Iterable[pd.DataFrame], wm_s: int,
+    uid: Any, length_s: int, slide_s: int, cooldown_s: int,
+) -> "tuple[int | None, list[int], list[bool], pd.DataFrame]":
+    """One micro-batch of the leading-edge throttle for one user, the
+    state machine behind both state APIs (``leading_throttle_fn`` and
+    ``processor.ThrottleProcessor`` only read and write their state).
+
+    ``last_alert`` is the window start of the last alert (None =
+    never), ``ev_es``/``ev_hr`` the retained events as parallel
+    (epoch second, is_hr) lists, ``pdfs`` the new ``es``/``hr_q`` rows,
+    ``wm_s`` the watermark in epoch seconds. Returns the new last
+    alert, the pruned history and the alert rows (``OUTPUT_SCHEMA``
+    columns)."""
+    ev_es, ev_hr = list(ev_es), list(ev_hr)
+    # Late-data drop (F6/W4, `Akka...scala:73-76`): the engine only
+    # auto-filters late rows for aggregations/joins, so the step
+    # enforces the watermark itself.
+    for pdf in pdfs:
+        for es, hq in zip(pdf["es"], pdf["hr_q"]):
+            if wm_s > 0 and es < wm_s:
+                continue
+            ev_es.append(int(es))
+            ev_hr.append(bool(hq))
+
+    out: list[tuple[Any, int, str]] = []
+    for w in _qualifying_wstarts(ev_es, ev_hr, length_s, slide_s):
+        if last_alert is None or w - last_alert > cooldown_s:
+            last_alert = w
+            out.append((uid, w, f"User {uid} has a problem"))
+
+    # GC: an event at es only joins windows starting in
+    # (es - length, es]; once the watermark passes es + length the
+    # event can never change a not-yet-suppressed window.
+    if wm_s > 0:
+        horizon = wm_s - length_s
+        ev_hr = [h for e, h in zip(ev_es, ev_hr) if e >= horizon]
+        ev_es = [e for e in ev_es if e >= horizon]
+    alerts = pd.DataFrame(out, columns=["user_id", "alert_epoch", "message"])
+    return last_alert, ev_es, ev_hr, alerts
+
+
 def leading_throttle_fn(length_s: int, slide_s: int, cooldown_s: int):
     """Build the per-group stateful function for
-    ``applyInPandasWithState``."""
+    ``applyInPandasWithState``: ``leading_throttle_step`` over the
+    ``STATE_SCHEMA`` tuple."""
 
     def fn(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_alert, ev_es, ev_hr = state.get
-            ev_es, ev_hr = list(ev_es), list(ev_hr)
-        else:
-            last_alert, ev_es, ev_hr = -1, [], []
-
-        # Late-data drop (F6/W4, `Akka...scala:73-76`): the engine only
-        # auto-filters late rows for aggregations/joins, so the
-        # processor enforces the watermark itself.
-        wm_s = state.getCurrentWatermarkMs() // 1000
-        for pdf in pdfs:
-            for es, hq in zip(pdf["es"], pdf["hr_q"]):
-                if wm_s > 0 and es < wm_s:
-                    continue
-                ev_es.append(int(es))
-                ev_hr.append(bool(hq))
-
-        out: list[tuple[int, int, str]] = []
-        uid = key[0]
-        for w in _qualifying_wstarts(ev_es, ev_hr, length_s, slide_s):
-            if last_alert < 0 or w - last_alert > cooldown_s:
-                last_alert = w
-                out.append((uid, w, f"User {uid} has a problem"))
-
-        # GC: an event at es only joins windows starting in
-        # (es - length, es]; once the watermark passes es + length the
-        # event can never change a not-yet-suppressed window.
-        if wm_s > 0:
-            horizon = wm_s - length_s
-            kept = [(e, h) for e, h in zip(ev_es, ev_hr) if e >= horizon]
-            ev_es = [e for e, _ in kept]
-            ev_hr = [h for _, h in kept]
-
-        state.update((last_alert, ev_es, ev_hr))
-        yield pd.DataFrame(out, columns=["user_id", "alert_epoch", "message"])
+        last, ev_es, ev_hr = state.get if state.exists else (-1, [], [])
+        last_alert, ev_es, ev_hr, alerts = leading_throttle_step(
+            last if last >= 0 else None, ev_es, ev_hr, pdfs,
+            state.getCurrentWatermarkMs() // 1000, key[0],
+            length_s, slide_s, cooldown_s,
+        )
+        state.update((-1 if last_alert is None else last_alert,
+                      ev_es, ev_hr))
+        yield alerts
 
     return fn
 
@@ -421,19 +439,14 @@ def funnel_stream(
     )
 
 
-def alerts_stream_leading(
-    events: DataFrame,
-    length_s: int,
-    slide_s: int,
-    cooldown_s: int,
-    watermark_delay: str = "0 seconds",
-    hr_pred=None,
-    bp_pred=None,
+def throttle_keyed_events(
+    events: DataFrame, watermark_delay: str, hr_pred=None, bp_pred=None
 ) -> DataFrame:
-    """Leading-edge throttled alert stream (T2/T3 exact semantics):
-    one stateful operator, keyed by user. Late events beyond the
-    watermark are dropped by the engine before the operator (F6/W4,
-    `Akka...scala:73-76`)."""
+    """The watermarked keyed projection both leading-edge stream
+    builders feed their stateful operator: ``user_id``, ``ts``, ``es``
+    (epoch seconds) and the ``hr_q``/``bp_q`` flags, keeping only rows
+    that raise one. The predicates default to the paper's thresholds
+    (hr above ``HR_THRESHOLD``, bp below ``BP_THRESHOLD``)."""
     from pyspark.sql import functions as F
 
     from ..operators.alerting import BP_THRESHOLD, HR_THRESHOLD
@@ -444,7 +457,7 @@ def alerts_stream_leading(
     bp_q = bp_pred if bp_pred is not None else (
         (F.col("event_type") == "bp") & (F.col("value") < BP_THRESHOLD)
     )
-    keyed = (
+    return (
         events.withWatermark("ts", watermark_delay)
         .select(
             "user_id",
@@ -455,6 +468,23 @@ def alerts_stream_leading(
         )
         .where(F.col("hr_q") | F.col("bp_q"))
     )
+
+
+def alerts_stream_leading(
+    events: DataFrame,
+    length_s: int,
+    slide_s: int,
+    cooldown_s: int,
+    watermark_delay: str = "0 seconds",
+    hr_pred=None,
+    bp_pred=None,
+) -> DataFrame:
+    """Leading-edge throttled alert stream (T2/T3 exact semantics):
+    one stateful operator, keyed by user. The engine does not filter
+    late rows for a NoTimeout ``applyInPandasWithState``, so
+    ``leading_throttle_step`` drops events behind the watermark itself
+    (F6/W4, `Akka...scala:73-76`)."""
+    keyed = throttle_keyed_events(events, watermark_delay, hr_pred, bp_pred)
     return keyed.groupBy("user_id").applyInPandasWithState(
         leading_throttle_fn(length_s, slide_s, cooldown_s),
         OUTPUT_SCHEMA,

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import os
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -10,6 +12,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from biometric_stream_processing_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def write_stream_batch(df, indir) -> None:
+    """Append ``df`` to ``indir`` as one parquet file and stamp it one
+    second past every part file already there (never before now). The
+    file stream source orders new files by modification time, so
+    successive calls become successive micro-batches under
+    ``maxFilesPerTrigger=1`` without sleeping between writes."""
+    d = Path(indir)
+    old = set(d.glob("part-*"))
+    df.coalesce(1).write.mode("append").parquet(str(d))
+    stamp = max([int(time.time())]
+                + [int(f.stat().st_mtime) + 1 for f in old])
+    for f in set(d.glob("part-*")) - old:
+        os.utime(f, (stamp, stamp))
 
 
 def pytest_collection_modifyitems(config, items):

@@ -5,7 +5,6 @@ leading-edge throttle, including cross-batch state and late data."""
 from __future__ import annotations
 
 import shutil
-import time
 import uuid
 from datetime import datetime, timedelta
 from pathlib import Path
@@ -20,6 +19,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
 from biometric_stream_processing_spark.streaming.state import (
     alerts_stream_leading,
 )
+from tests.conftest import write_stream_batch
 
 T0 = datetime(2024, 1, 1)
 SCHEMA = "ts timestamp, event_type string, user_id long, value double"
@@ -28,18 +28,14 @@ SENTINEL = (100000, "hr", -1, 0.0)  # watermark pusher; never qualifies
 
 def _write_batches(spark, indir: Path, batches):
     """Each batch of (offset_s, kind, user, value) rows → one parquet
-    file; maxFilesPerTrigger=1 then yields one micro-batch per file.
-    The file source orders by modification time, so successive writes
-    become successive micro-batches."""
+    file; maxFilesPerTrigger=1 then yields one micro-batch per file
+    (``write_stream_batch`` orders the files by modification time)."""
     for i, rows in enumerate(batches):
         data = [
             (T0 + timedelta(seconds=off), kind, uid, float(v))
             for off, kind, uid, v in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
 
 
 def _run(spark, tmpdir, batches, builder, **kw):

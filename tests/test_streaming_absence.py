@@ -9,7 +9,6 @@ its trigger under a lagged watermark) still resolves."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 from pathlib import Path
@@ -21,6 +20,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     run_stream_to_memory,
 )
 from biometric_stream_processing_spark.streaming.state import absence_stream
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -39,10 +39,7 @@ def _run(spark, tmpdir, batches, delay="0 seconds"):  # noqa: F811
             (eid, T0 + timedelta(seconds=off), uid, kind)
             for eid, off, uid, kind in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

@@ -9,7 +9,6 @@ correctly, and pre-restart emissions appear exactly once."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -24,6 +23,7 @@ from biometric_stream_processing_spark.streaming.state import (
     attribution_stream,
     transition_stream,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -38,10 +38,7 @@ def _write(spark, indir, batches):
             (T0 + timedelta(seconds=off), eid, uid, kind, float(v))
             for off, eid, uid, kind, v in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
 
 
 def _attr(src):

@@ -9,7 +9,6 @@ a negative gap, and the sums survive a mid-stream kill + restart."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -21,6 +20,7 @@ from biometric_stream_processing_spark.streaming.state import (
     _S2_SPLIT,
     cadence_stream,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -35,10 +35,7 @@ def _run(spark, tmpdir, batches):  # noqa: F811
             (T0 + timedelta(seconds=off), eid, uid, 1.0)
             for off, eid, uid in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

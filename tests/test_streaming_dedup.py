@@ -15,6 +15,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     read_events_stream,
     run_stream_to_memory,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import SCHEMA, _write_batches, tmpdir  # noqa: F401
 
 
@@ -65,7 +66,6 @@ def test_complete_mode_registry_folds_across_batches(spark, tmpdir):
     mode — `streaming_dedup_canonicals`' shape): a duplicate arriving
     in a LATER micro-batch must fold into its group (count grows,
     canonical id stays the min) in the final snapshot."""
-    import time
     import uuid
 
     from pyspark.sql import functions as F
@@ -76,10 +76,9 @@ def test_complete_mode_registry_folds_across_batches(spark, tmpdir):
         [(0, "aaa"), (1, "bbb")],
         [(2, "aaa"), (3, "ccc")],   # doc 2 duplicates doc 0's content
     ):
-        spark.createDataFrame(
-            batch, "doc_id long, text string"
-        ).coalesce(1).write.mode("append").parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(
+            spark.createDataFrame(batch, "doc_id long, text string"), indir
+        )
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1).parquet(str(indir))

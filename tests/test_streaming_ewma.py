@@ -9,7 +9,6 @@ checkpoint restart."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -23,6 +22,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     run_stream_to_memory,
 )
 from biometric_stream_processing_spark.streaming.state import ewma_stream
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -46,10 +46,7 @@ def _run(spark, tmpdir, batches):  # noqa: F811
             (T0 + timedelta(seconds=off), eid, uid, float(v))
             for off, eid, uid, v in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

@@ -9,7 +9,6 @@ regressions behind the watermark."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 from pathlib import Path
@@ -19,6 +18,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     run_stream_to_memory,
 )
 from biometric_stream_processing_spark.streaming.state import funnel_stream
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -33,10 +33,7 @@ def _run(spark, tmpdir, batches):  # noqa: F811
             (T0 + timedelta(seconds=off), uid, kind)
             for off, uid, kind in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

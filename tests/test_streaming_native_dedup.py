@@ -9,7 +9,6 @@ plain ``dropDuplicates`` would never show."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -17,6 +16,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     read_events_stream,
     run_stream_to_memory,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -31,10 +31,7 @@ def _run(spark, tmpdir, batches, delay="60 seconds"):  # noqa: F811
             (T0 + timedelta(seconds=off), eid, uid)
             for off, eid, uid in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

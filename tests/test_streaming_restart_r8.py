@@ -10,7 +10,6 @@ nothing pre-restart is duplicated."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -20,6 +19,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     dedup_registry_merge,
     read_events_stream,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import SCHEMA, _write_batches, tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -75,7 +75,6 @@ def test_ohlc_state_survives_restart(spark, tmpdir):  # noqa: F811
         [(100, "hr", 1, 5.0), (200, "hr", 1, 7.0)],
     ])
     phase("ohlc_r8_a_" + run)
-    time.sleep(1.1)
     _write_batches(spark, indir, [
         # earlier event for bar 0 (retakes open) + a second bar
         [(50, "hr", 2, 9.0), (950, "hr", 1, 3.0)],
@@ -101,10 +100,7 @@ def _docs_write(spark, indir, rows):
     schema = ("doc_id long, text string, lang string, source string, "
               "n_chars long")
     data = [(i, t, "en", "s", len(t)) for i, t in rows]
-    spark.createDataFrame(data, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(indir))
-    time.sleep(1.1)
+    write_stream_batch(spark.createDataFrame(data, schema), indir)
 
 
 def test_dedup_merge_registry_survives_restart(spark, tmpdir):  # noqa: F811

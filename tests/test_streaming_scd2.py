@@ -8,7 +8,6 @@ advances must NOT flush), and late regressions are dropped."""
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 
@@ -20,6 +19,7 @@ from biometric_stream_processing_spark.streaming.state import (
     SCD2_FLUSH_AT_MS,
     scd2_stream,
 )
+from tests.conftest import write_stream_batch
 from tests.test_streaming import tmpdir  # noqa: F401
 
 T0 = datetime(2024, 1, 1)
@@ -39,10 +39,7 @@ def _run(spark, tmpdir, batches, flush=True):  # noqa: F811
             (T0 + timedelta(seconds=off), eid, uid, kind)
             for off, eid, uid, kind in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
     src = read_events_stream(
         spark, str(indir), SCHEMA, max_files_per_trigger=1
     )

@@ -14,7 +14,6 @@ it — the per-slide repeat — and chaining the session-window dedup
 
 from __future__ import annotations
 
-import time
 import uuid
 from datetime import datetime, timedelta
 from pathlib import Path
@@ -29,6 +28,7 @@ from biometric_stream_processing_spark.streaming.pipeline import (
     run_stream_to_memory,
     run_stream_update_log,
 )
+from tests.conftest import write_stream_batch
 
 T0 = datetime(2024, 1, 1)
 SCHEMA = "ts timestamp, event_type string, user_id long, value double"
@@ -49,10 +49,7 @@ def _write_batches(spark, indir: Path, batches):
             (T0 + timedelta(seconds=off), kind, uid, float(v))
             for off, kind, uid, v in rows
         ]
-        spark.createDataFrame(data, SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(indir))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+        write_stream_batch(spark.createDataFrame(data, SCHEMA), indir)
 
 
 @pytest.fixture

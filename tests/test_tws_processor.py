@@ -1,24 +1,14 @@
-"""transformWithStateInPandas throttle — skipped where the protobuf
-runtime is unavailable (see streaming/processor.py docstring); the
-processor's logic core is shared with the applyInPandasWithState
-variant and unit-tested here directly.
-
-DEFINITIVE CLOSE (round 4; re-confirmed round 17 per VERDICT_r16 #4):
-``google.protobuf`` is absent from the container (only typeshed stubs
-exist on disk, no wheel anywhere under site-packages), the package
-index is unreachable (``pip download protobuf`` fails DNS resolution
-on every retry), and hand-writing a protobuf runtime is not a viable
-vendor: the TWS Python worker speaks the StateMessage protocol to the
-JVM state server over a socket, so the runtime must be wire-correct —
-a stub would corrupt state silently rather than fail loudly. The skip
-is permanent in this environment. The TWS path stays as forward-API
-wiring verified by these logic-core tests; the
-``applyInPandasWithState`` twin carries the runtime semantics
-(golden + restart tested in test_streaming*.py, test_rocksdb_state.py).
+"""transformWithStateInPandas throttle. The runtime test needs
+``google.protobuf`` (the TWS Python worker talks to the JVM state
+server over protobuf); where it is absent, as here, that test skips.
+The state machine is ``state.leading_throttle_step``, shared with the
+applyInPandasWithState adapter; both adapters are driven here through
+fake state objects over the same micro-batches.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from biometric_stream_processing_spark.streaming.processor import (
@@ -28,7 +18,9 @@ from biometric_stream_processing_spark.streaming.processor import (
 )
 from biometric_stream_processing_spark.streaming.state import (
     _qualifying_wstarts,
+    leading_throttle_fn,
 )
+from tests.test_round8_properties import FakeGroupState
 
 
 def test_qualifying_wstarts_algebra():
@@ -66,3 +58,107 @@ def test_tws_fixture_a(spark, tmp_path):
         out, "tws" + uuid.uuid4().hex[:6], str(tmp_path / "ckpt")
     )
     assert [r.user_id for r in res.collect()] == [12346]
+
+
+class _ValueState:
+    def __init__(self) -> None:
+        self.v: tuple | None = None
+
+    def get(self):
+        return self.v
+
+    def update(self, v) -> None:
+        self.v = tuple(v)
+
+
+class _ListState:
+    def __init__(self) -> None:
+        self.rows: list[tuple] = []
+
+    def get(self):
+        return iter(list(self.rows))
+
+    def clear(self) -> None:
+        self.rows = []
+
+    def appendList(self, rows) -> None:
+        self.rows.extend(tuple(r) for r in rows)
+
+
+class _Handle:
+    """The slice of StatefulProcessorHandle ThrottleProcessor touches;
+    records each state's name and schema."""
+
+    def __init__(self) -> None:
+        self.schemas: dict[str, str] = {}
+
+    def getValueState(self, name: str, schema: str) -> _ValueState:
+        self.schemas[name] = schema
+        return _ValueState()
+
+    def getListState(self, name: str, schema: str) -> _ListState:
+        self.schemas[name] = schema
+        return _ListState()
+
+
+class _TimerValues:
+    def __init__(self, wm_ms: int) -> None:
+        self.wm_ms = wm_ms
+
+    def getCurrentWatermarkInMs(self) -> int:
+        return self.wm_ms
+
+
+def test_tws_adapter_matches_apply_in_pandas_adapter():
+    """Both adapters over one user's micro-batches (L=10, S=1, C=30):
+    hr-only (no alert; the two "never alerted" encodings), the first
+    episode, a late row plus a pair inside the cooldown (suppressed),
+    a pair past the cooldown (re-arm) while the watermark passes the
+    first events' ``es + length`` (history GC), then a lone hr row."""
+    L, S, C = 10, 1, 30
+    B, uid = 1_700_000_000, 7
+    # (watermark second, [(es, is_hr), ...]) per micro-batch
+    batches = [
+        (0, [(B - 50, True)]),
+        (B - 50, [(B, False), (B + 2, True)]),
+        (B + 2, [(B - 100, True), (B + 10, False), (B + 11, True)]),
+        (B + 11, [(B + 40, False), (B + 41, True)]),
+        (B + 41, [(B + 45, True)]),
+    ]
+    proc = ThrottleProcessor(L, S, C)
+    handle = _Handle()
+    proc.init(handle)
+    assert handle.schemas == {
+        "last_alert": "last long", "history": "es long, hr boolean",
+    }
+    fn = leading_throttle_fn(L, S, C)
+    gs = FakeGroupState()
+
+    emitted = []
+    for wm_s, rows in batches:
+        pdf = pd.DataFrame({
+            "user_id": [uid] * len(rows),
+            "es": [e for e, _ in rows],
+            "hr_q": [h for _, h in rows],
+            "bp_q": [not h for _, h in rows],
+        })
+        tws_out = pd.concat(list(proc.handleInputRows(
+            (uid,), iter([pdf]), _TimerValues(wm_s * 1000)
+        )))
+        gs.wm_ms = wm_s * 1000
+        apply_out = pd.concat(list(fn((uid,), iter([pdf]), gs)))
+        tws_rows = list(tws_out.itertuples(index=False, name=None))
+        assert tws_rows == list(apply_out.itertuples(index=False,
+                                                     name=None))
+        last, ev_es, ev_hr = gs.get
+        assert proc.history.rows == list(zip(ev_es, ev_hr))
+        assert proc.last_alert.get() == (None if last < 0 else (last,))
+        emitted.append([w for _, w, _ in tws_rows])
+
+    # first qualifying window B-7; re-armed at B+32 > B-7 + C
+    assert emitted == [[], [B - 7], [], [B + 32], []]
+    # late B-100 never joined; B-50 .. B+11 GC'd once the watermark
+    # passed es + L
+    assert proc.history.rows == [
+        (B + 40, False), (B + 41, True), (B + 45, True),
+    ]
