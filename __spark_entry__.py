@@ -142,52 +142,105 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # composites (billing annotated per round in BENCH_DETAIL via
     # bench.py's MEMO_OWNERS map).
     #
-    # ROUND 18 (recorded rounds r1-r7, r9-r17; optimization round 2
-    # of 2): r15 leaves the window when this round records
-    # (post-recording window {r16, r17, r18}), so the 49-entry
-    # r15-green remainder fills the front — derived fresh via
-    # tools/round_plan.py against CORRECTNESS_r{15,16,17}: 49 due
-    # (the 50-entry r15 block minus orders_constraint_report, which
-    # round 16 pre-verified as its spare), r16 block 50, r17 block 50,
-    # queue EMPTY — 49+50+50 = 149, set-check clean. ONE spare slot.
-    # SPARE (position 50): embedding_kmeans_quality — the documented
-    # "oldest-fresh fill" (head of the r16 block in r16 gate order),
-    # pre-paying round-19 debt so round 19 gets a spare of its own.
-    # The round-17 registry note's pre-decided spare
-    # (staged_r18.streaming_containment_registry) is NOT registered:
-    # it is a new feature and this is an optimization round
-    # (OPTIMIZATION_r17 "NOTE FOR ROUND 18"); it stays a validated
-    # staged demonstration. An edit-enabling spare (fronting a frozen
-    # wall to optimize it) was evaluated and declined on measurement:
-    # every frozen >1 s wall carries a multi-round pin
-    # (embedding_similar_pairs: unroll/Arrow dead ends recorded in
-    # operators/similarity.py; dup_graph_*: one-job-per-level loops;
-    # streaming_state_history: parquet-sink A/B measured a wash —
-    # OPTIMIZATION_r18.md).
-    # MEMO_OWNERS moves (bench.py map, re-derived for this order and
-    # verified by the bench's observed-owner probe): minhash_lsh_pairs
-    # (front 2) now owns the LSH candidate persist,
-    # near_dup_clusters (front 3) keeps the text closure,
-    # embedding_ivf_topk (front 7) keeps the IVF cells,
-    # corpus_token_budget (front 9) takes the clean corpus,
-    # cross_modal_dup_agreement (front 10) keeps the embedding
-    # closure, doc_perplexity_buckets (front 48) keeps the unigram
-    # scorer, embedding_kmeans_quality (front 50) keeps the kmeans
-    # map; in the tail the r16 block precedes the r17 block, so
-    # decontaminated_train_docs takes the decontam pair,
-    # training_corpus the training rows, doc_repetition_stats the
-    # doc-term matrix, ngram_jaccard_dups the verify chain's
-    # text_lsh_pairs read (already owned by minhash up front), and
-    # doc_winnow_fingerprints (r17 block) keeps the winnow sketch.
+    # ROUND 19 (recorded rounds r1-r7, r9-r18): r16 leaves the
+    # window when this round records (post-recording window
+    # {r17, r18, r19}), so the 49-entry r16-green remainder fills the
+    # front — derived via tools/round_plan.py against
+    # CORRECTNESS_r{16,17,18}: 49 due (the 50-entry r16 block minus
+    # embedding_kmeans_quality, which round 18 pre-verified as its
+    # spare), r17 block 50, r18 block 50, queue EMPTY — 49+50+50 =
+    # 149. ONE spare slot.
+    # SPARE (position 50): streaming_user_cadence — its state kernel
+    # moved onto state.py's shared admission helpers, so its deep
+    # fingerprint changed and it must re-enter the prefix; it is
+    # r17-green, so the slot also pre-pays one round-20 entry.
+    # The other five state-kernel ports (streaming_anomalies,
+    # streaming_ewma, streaming_state_history, streaming_attribution,
+    # streaming_transitions) are already in the due block.
+    # MEMO_OWNERS moves (bench.py map, taken from the bench's
+    # observed-owner probes for this order): training_corpus (front 2)
+    # now owns the clean corpus and the LSH candidates besides its
+    # rows, doc_repetition_stats (front 3) the doc-term matrix,
+    # embedding_dup_clusters (front 8) the embedding closure and the
+    # IVF cells, near_dup_representatives (front 9) the text closure,
+    # embedding_kmeans_cells (front 37) the kmeans map and
+    # doc_unigram_logprob (front 46) the unigram scorer; the decontam
+    # pair, the training rows and the winnow sketch keep their owners.
     front = [
-        # --- last green r15 (oldest debt) IN ITS r15 GATE ORDER —
-        # 49 entries; order preserved so BENCH_DETAIL_r15 per-query
-        # numbers stay comparable ---
-        "dedup_exact", "minhash_lsh_pairs",
-        "near_dup_clusters", "simhash_fingerprints",
-        "simhash_dup_pairs",
-        "embedding_topk", "embedding_ivf_topk",
-        "embedding_similar_pairs_bucketed",
+        # --- last green r16 (oldest debt) IN ITS r16 GATE ORDER —
+        # 49 entries ---
+        "decontaminated_train_docs", "training_corpus",
+        "doc_repetition_stats", "nation_pair_volume",
+        "embedding_srp_pairs", "ngram_jaccard_dups",
+        "documents_clean_corpus", "embedding_dup_clusters",
+        "near_dup_representatives", "embedding_similar_pairs",
+        "user_state_history", "user_hourly_gapfill",
+        "running_zscore_flags", "value_histogram",
+        "user_retention_cohorts", "user_rolling_median",
+        "doc_weighted_sample", "corpus_mixture_sample",
+        "above_median_length_docs", "split_overlap_matrix",
+        "corpus_heavy_hitters", "term_posting_lists",
+        "corpus_pmi_collocations", "hll_user_rollup",
+        "source_quality_ols", "multimodal_decode_png",
+        "sql_nation_revenue", "parse_props_variant",
+        "dynamic_session_stats", "salted_segment_revenue",
+        "dup_graph_stats", "dup_graph_pagerank",
+        "dup_graph_bfs_depths", "ivf_recall_report",
+        "streaming_approx_users", "streaming_native_dedup",
+        "embedding_kmeans_cells", "streaming_anomalies",
+        "streaming_state_history", "embedding_int8_recall",
+        "source_unigram_kl", "streaming_ewma", "user_cadence_profile",
+        "streaming_attribution", "streaming_transitions",
+        "doc_unigram_logprob", "biometric_union",
+        "streaming_enriched_segment_counts",
+        "orders_constraint_report",
+        # --- spare slot: source-changed re-verification (r17-green,
+        # pre-paying round-20 debt) ---
+        "streaming_user_cadence",
+    ]
+    tail = [
+        # ROUND-20 OBLIGATION (K=3 on recorded rounds; once round 19
+        # records, the window is {r17, r18, r19} and r17 leaves when
+        # round 20 records): the 49-entry r17-green remainder below
+        # (alert_windows .. doc_tfidf_keywords, r17 gate order — the
+        # 50-entry r17 block minus streaming_user_cadence, pre-verified
+        # as round 19's spare) fills the round-20 front, leaving ONE
+        # spare slot. Re-derive from the CORRECTNESS files via
+        # tools/round_plan.py, do not trust this count.
+        # ROUND-21 OBLIGATION: the full 50-entry r18 block (second
+        # group below).
+        #
+        # --- last green r17 (r17 gate order preserved minus the
+        # cadence spare; rotates front in round 20) ---
+        "alert_windows", "alerts_throttled",
+        "alerts_leading_debounce", "order_counts_unpivot",
+        "status_priority_cube", "distinct_user_type_pairs",
+        "top_orders", "customers_without_orders",
+        "customer_running_totals", "dormant_customers_by_segment",
+        "users_with_both_streams", "order_price_deciles",
+        "order_priority_pivot", "customers_with_orders",
+        "users_never_purchasing", "approx_distinct_bounds",
+        "value_percentiles", "doc_split_assignment",
+        "doc_stratified_sample", "doc_pack_assignments",
+        "multimodal_decode_audio", "multimodal_resize_images",
+        "doc_passages", "user_value_rolling_1h", "q1_pricing_summary",
+        "late_shipment_priority_counts", "parts_above_brand_avg",
+        "disjunctive_revenue", "top_customers_per_segment",
+        "abandoned_clicks", "source_dedup_report",
+        "source_quality_report", "corpus_vocab_topk",
+        "embedding_pca_quality", "orders_profile",
+        "dedup_pipeline_report", "streaming_alerts",
+        "streaming_dedup_merge", "streaming_interval_pairs",
+        "streaming_session_stats", "streaming_vocab_topk",
+        "streaming_abandoned_clicks", "streaming_outer_pairs",
+        "regional_revenue_rollup", "q5_asia_revenue",
+        "doc_winnow_fingerprints", "user_value_ewma",
+        "contamination_overlaps", "doc_tfidf_keywords",
+        # --- last green r18 (the round-18 front, r18 gate order
+        # preserved; rotates front in round 21) ---
+        "dedup_exact", "minhash_lsh_pairs", "near_dup_clusters",
+        "simhash_fingerprints", "simhash_dup_pairs", "embedding_topk",
+        "embedding_ivf_topk", "embedding_similar_pairs_bucketed",
         "corpus_token_budget", "cross_modal_dup_agreement",
         "asof_latest_reading", "cogrouped_purchase_values",
         "event_type_stats", "funnel_view_click_purchase",
@@ -195,111 +248,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_token_counts", "doc_lang_quality",
         "streaming_alert_windows_update",
         "streaming_alert_windows_complete",
-        "streaming_dedup_canonicals",
-        "multimodal_meta", "multimodal_frame_samples",
-        "multimodal_features",
+        "streaming_dedup_canonicals", "multimodal_meta",
+        "multimodal_frame_samples", "multimodal_features",
         "parse_props_json", "serialize_events_json",
-        "interval_join_pairs", "full_outer_daily",
-        "tumbling_hourly", "user_sessions",
-        "props_map_entries", "salted_distinct_users",
-        "native_session_stats",
-        "fuzzy_name_matches", "event_type_ohlc",
-        "purchase_attribution",
+        "interval_join_pairs", "full_outer_daily", "tumbling_hourly",
+        "user_sessions", "props_map_entries", "salted_distinct_users",
+        "native_session_stats", "fuzzy_name_matches",
+        "event_type_ohlc", "purchase_attribution",
         "embedding_rrf_fusion", "session_transitions",
         "event_skew_profile", "label_centroid_report",
-        "streaming_ohlc", "doc_passage_dedup",
-        "doc_bigram_logprob",
-        "streaming_funnel",
-        "orc_interchange_report",
-        "streaming_user_gapfill",
-        "doc_duplicate_spans",
-        "doc_perplexity_buckets",
-        "doc_containment_dups",
-        # --- spare slot (oldest-fresh fill): head of the r16 block,
-        # pre-paying round-19 debt ---
+        "streaming_ohlc", "doc_passage_dedup", "doc_bigram_logprob",
+        "streaming_funnel", "orc_interchange_report",
+        "streaming_user_gapfill", "doc_duplicate_spans",
+        "doc_perplexity_buckets", "doc_containment_dups",
         "embedding_kmeans_quality",
-    ]
-    tail = [
-        # ROUND-19 OBLIGATION (K=3 on recorded rounds; once round 18
-        # records, the window is {r16, r17, r18} and r16 leaves when
-        # round 19 records): the 49-entry r16-green remainder below
-        # (decontaminated_train_docs .. orders_constraint_report, r16
-        # gate order — the 50-entry r16 block minus
-        # embedding_kmeans_quality, pre-verified as round 18's spare)
-        # fills the round-19 front, leaving ONE spare slot. Re-derive
-        # from the CORRECTNESS files via tools/round_plan.py, do not
-        # trust this count — the round-11 arithmetic catch is the
-        # precedent.
-        # ROUND-20 OBLIGATION: the full 50-entry r17 block (second
-        # group below) — zero spares in round 20 unless round 19
-        # pre-pays with its spare.
-        #
-        # --- last green r16 (r16 gate order preserved minus the
-        # kmeans_quality spare; rotates front in round 19) ---
-        "decontaminated_train_docs",
-        "training_corpus", "doc_repetition_stats",
-        "nation_pair_volume", "embedding_srp_pairs",
-        "ngram_jaccard_dups", "documents_clean_corpus",
-        "embedding_dup_clusters", "near_dup_representatives",
-        "embedding_similar_pairs",
-        "user_state_history", "user_hourly_gapfill",
-        "running_zscore_flags",
-        "value_histogram", "user_retention_cohorts",
-        "user_rolling_median",
-        "doc_weighted_sample", "corpus_mixture_sample",
-        "above_median_length_docs", "split_overlap_matrix",
-        "corpus_heavy_hitters",
-        "term_posting_lists", "corpus_pmi_collocations",
-        "hll_user_rollup", "source_quality_ols",
-        "multimodal_decode_png",
-        "sql_nation_revenue", "parse_props_variant",
-        "dynamic_session_stats", "salted_segment_revenue",
-        "dup_graph_stats", "dup_graph_pagerank",
-        "dup_graph_bfs_depths", "ivf_recall_report",
-        "streaming_approx_users", "streaming_native_dedup",
-        "embedding_kmeans_cells", "streaming_anomalies",
-        "streaming_state_history",
-        "embedding_int8_recall",
-        "source_unigram_kl", "streaming_ewma",
-        "user_cadence_profile",
-        "streaming_attribution", "streaming_transitions",
-        "doc_unigram_logprob",
-        "biometric_union",
-        "streaming_enriched_segment_counts",
-        "orders_constraint_report",
-        # --- last green r17 (the r14-green block round 17
-        # re-verified, r14/r17 gate order preserved; rotates front in
-        # round 20) ---
-        "alert_windows",
-        "alerts_throttled", "alerts_leading_debounce",
-        "order_counts_unpivot", "status_priority_cube",
-        "distinct_user_type_pairs", "top_orders",
-        "customers_without_orders", "customer_running_totals",
-        "dormant_customers_by_segment", "users_with_both_streams",
-        "order_price_deciles", "order_priority_pivot",
-        "customers_with_orders", "users_never_purchasing",
-        "approx_distinct_bounds", "value_percentiles",
-        "doc_split_assignment", "doc_stratified_sample",
-        "doc_pack_assignments",
-        "multimodal_decode_audio", "multimodal_resize_images",
-        "doc_passages",
-        "user_value_rolling_1h", "q1_pricing_summary",
-        "late_shipment_priority_counts", "parts_above_brand_avg",
-        "disjunctive_revenue", "top_customers_per_segment",
-        "abandoned_clicks", "source_dedup_report",
-        "source_quality_report",
-        "corpus_vocab_topk", "embedding_pca_quality",
-        "orders_profile", "dedup_pipeline_report",
-        "streaming_alerts", "streaming_dedup_merge",
-        "streaming_interval_pairs",
-        "streaming_session_stats", "streaming_vocab_topk",
-        "streaming_abandoned_clicks", "streaming_outer_pairs",
-        "streaming_user_cadence",
-        "regional_revenue_rollup", "q5_asia_revenue",
-        "doc_winnow_fingerprints",
-        "user_value_ewma",
-        "contamination_overlaps",
-        "doc_tfidf_keywords",
     ]
     ordered = front + [n for n in all_q if n not in front and n not in tail]
     ordered += [n for n in tail if n in all_q]

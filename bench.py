@@ -133,60 +133,56 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # BENCH_DETAIL_r<N>.json so round-over-round per-query diffs separate
 # real regressions from billing shifts. "prev" = last round's owner.
 MEMO_OWNERS = {
-    # Round-18 registration: the 49-entry r15-green obligation block
-    # leads IN ITS r15 GATE ORDER + the embedding_kmeans_quality
-    # spare at position 50; the tail keeps the r16 block ahead of the
-    # r17 (r14-green) block. "prev" = the round-17 owner, so
-    # round-over-round per-query diffs separate billing shifts from
-    # real regressions. Derivation verified by the bench's
-    # observed-owner probes (mismatch list must stay empty).
-    # The kmeans map's first consumer is the spare itself (front 50).
-    "kmeans_training_and_assignment_map": {
-        "owner": "embedding_kmeans_quality",
-        "prev": "embedding_kmeans_quality"},
-    # The five corpus-chain memos split up: minhash_lsh_pairs
-    # (front 2) is now itself the first consumer of its persisted
-    # candidate relation; corpus_token_budget (front 9) is the first
-    # clean-corpus reader; the decontam pair and the training-corpus
-    # rows fall to their r16-block builders (decontaminated_train_docs
-    # / training_corpus), ahead of dedup_pipeline_report (r17 block),
-    # which loses all five bills it carried in round 17.
+    # Round-19 registration: the 49-entry r16-green obligation block
+    # leads IN ITS r16 GATE ORDER + the streaming_user_cadence spare
+    # at position 50; the tail keeps the r17 block ahead of the r18
+    # block (the round-18 front). "prev" = the round-18 owner. Every
+    # owner below is the bench's observed first consumer for this
+    # order (mismatch list empty). Eight of the twelve bills move:
+    # the r16 block now runs first, so its entries take the memos the
+    # r15 block owned in round 18.
     "decontam_gram_index": {
         "owner": "decontaminated_train_docs",
-        "prev": "dedup_pipeline_report"},
+        "prev": "decontaminated_train_docs"},
     "decontam_survivors": {
         "owner": "decontaminated_train_docs",
-        "prev": "dedup_pipeline_report"},
+        "prev": "decontaminated_train_docs"},
+    # training_corpus (front 2) is the first entry to read the clean
+    # corpus and the LSH candidates, so it pays both besides its rows.
     "training_corpus_rows": {
         "owner": "training_corpus",
-        "prev": "dedup_pipeline_report"},
+        "prev": "training_corpus"},
     "clean_corpus": {
-        "owner": "corpus_token_budget",
-        "prev": "dedup_pipeline_report"},
+        "owner": "training_corpus",
+        "prev": "corpus_token_budget"},
     "text_lsh_pairs": {
-        "owner": "minhash_lsh_pairs",
-        "prev": "dedup_pipeline_report"},
-    # doc_perplexity_buckets (front 48) builds the unigram scorer,
-    # whose construction itself reads the doc-term matrix — so BOTH
-    # memos bill to it (doc_repetition_stats and corpus_vocab_topk,
-    # the other _TF consumers, sit in the tail blocks).
+        "owner": "training_corpus",
+        "prev": "minhash_lsh_pairs"},
+    # doc_repetition_stats (front 3) is the first doc-term reader; the
+    # unigram scorer falls to doc_unigram_logprob (front 46), ahead of
+    # doc_perplexity_buckets (r18 tail block).
     "doc_term_matrix": {
-        "owner": "doc_perplexity_buckets",
-        "prev": "corpus_vocab_topk"},
-    "unigram_scores": {
-        "owner": "doc_perplexity_buckets",
+        "owner": "doc_repetition_stats",
         "prev": "doc_perplexity_buckets"},
-    # Unchanged from round 17: the r15 entries that owned these memos
-    # as tail-first-consumers now own them as front entries.
+    "unigram_scores": {
+        "owner": "doc_unigram_logprob",
+        "prev": "doc_perplexity_buckets"},
+    # embedding_dup_clusters (front 8) builds the embedding closure,
+    # whose candidate pairs read the IVF cells.
     "embedding_cluster_closure": {
-        "owner": "cross_modal_dup_agreement",
+        "owner": "embedding_dup_clusters",
         "prev": "cross_modal_dup_agreement"},
-    "text_cluster_closure": {
-        "owner": "near_dup_clusters",
-        "prev": "near_dup_clusters"},
     "ivf_cell_assignment": {
-        "owner": "embedding_ivf_topk",
+        "owner": "embedding_dup_clusters",
         "prev": "embedding_ivf_topk"},
+    "text_cluster_closure": {
+        "owner": "near_dup_representatives",
+        "prev": "near_dup_clusters"},
+    # embedding_kmeans_cells (front 37) now precedes
+    # embedding_kmeans_quality (r18 tail block).
+    "kmeans_training_and_assignment_map": {
+        "owner": "embedding_kmeans_cells",
+        "prev": "embedding_kmeans_quality"},
     # winnow sketch: both consumers sit in the r17 tail block in
     # their r14 relative order (winnow before contamination)
     "winnow_fingerprints": {

@@ -48,12 +48,25 @@ machine stands on that disorder class:
   retraction-free repair does not exist for these — the emitted
   value/run at the straddle second is already out — so the honest
   contract is absorption order, stated in each kernel's docstring.
+
+ADMISSION CONTRACT (F6/W4, `Akka...scala:73-76`). The engine only
+auto-filters late rows for aggregations and joins, never for a Python
+stateful operator, so each machine drops the rows behind the watermark
+itself: a row whose event time is below the watermark is late; a row
+exactly at it is kept, and a watermark of 0 (none yet) keeps every row.
+``_admitted_rows`` applies the rule and returns the survivors as plain
+Python values sorted by (event time, event_id), the batch twins' total
+order. ``_keyed_state_stream`` builds the matching input: the
+watermarked ``user_id, ts, event_id, tus`` projection (``tus`` = event
+time in epoch micros) keyed by ``user_id``. ``absence``, ``funnel`` and
+``gapfill`` still write the rule inline.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable, Iterator, Sequence
+from operator import itemgetter
 from typing import Any
 
 import pandas as pd
@@ -61,9 +74,48 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id long, alert_epoch long, message string"
-# last alert window-start epoch (-1 = never), retained event history as
-# parallel arrays (epoch seconds, is_hr flag)
+# last alert window-start epoch (null = never), retained event history
+# as parallel arrays (epoch seconds, is_hr flag)
 STATE_SCHEMA = "last_alert long, ev_es array<long>, ev_hr array<boolean>"
+
+
+def _admitted_rows(
+    pdfs: Iterable[pd.DataFrame], wm: int, cols: Sequence[str]
+) -> "list[tuple]":
+    """The rows of ``pdfs`` not behind the watermark, as tuples of
+    Python values over ``cols``, sorted by the first two columns.
+
+    ``cols[0]`` is the event time in the unit of ``wm``: a row with
+    ``t < wm`` is late and dropped, a row at ``t == wm`` is kept, and
+    ``wm == 0`` (no watermark yet) keeps every row. ``tolist`` yields
+    Python ``int``/``float``/``str``, never numpy scalars, so a kernel's
+    integer sums stay arbitrary-precision."""
+    rows: list[tuple] = []
+    for pdf in pdfs:
+        rows.extend(zip(*(pdf[c].tolist() for c in cols)))
+    if wm > 0:
+        rows = [r for r in rows if r[0] >= wm]
+    rows.sort(key=itemgetter(0, 1))
+    return rows
+
+
+def _keyed_state_stream(
+    events: DataFrame, watermark_delay: str, cols: Sequence[Any], fn,
+    output_schema: str, state_schema: str, timeout: str,
+) -> DataFrame:
+    """Run ``fn`` as an append-mode ``applyInPandasWithState`` keyed by
+    ``user_id`` over the watermarked ``user_id, ts, event_id, tus,
+    *cols`` projection. ``ts`` stays in the projection because an
+    event-time timeout needs the watermarked column as input."""
+    from pyspark.sql import functions as F
+
+    keyed = events.withWatermark("ts", watermark_delay).select(
+        "user_id", "ts", "event_id",
+        F.unix_micros(F.col("ts")).alias("tus"), *cols,
+    )
+    return keyed.groupBy("user_id").applyInPandasWithState(
+        fn, output_schema, state_schema, "append", timeout,
+    )
 
 
 def _qualifying_wstarts(
@@ -94,20 +146,14 @@ def leading_throttle_step(
 
     ``last_alert`` is the window start of the last alert (None =
     never), ``ev_es``/``ev_hr`` the retained events as parallel
-    (epoch second, is_hr) lists, ``pdfs`` the new ``es``/``hr_q`` rows,
-    ``wm_s`` the watermark in epoch seconds. Returns the new last
-    alert, the pruned history and the alert rows (``OUTPUT_SCHEMA``
-    columns)."""
+    (epoch second, is_hr) lists, ``pdfs`` the new ``es``/``hr_q`` rows
+    (admitted by ``_admitted_rows``), ``wm_s`` the watermark in epoch
+    seconds. Returns the new last alert, the pruned history and the
+    alert rows (``OUTPUT_SCHEMA`` columns)."""
     ev_es, ev_hr = list(ev_es), list(ev_hr)
-    # Late-data drop (F6/W4, `Akka...scala:73-76`): the engine only
-    # auto-filters late rows for aggregations/joins, so the step
-    # enforces the watermark itself.
-    for pdf in pdfs:
-        for es, hq in zip(pdf["es"], pdf["hr_q"]):
-            if wm_s > 0 and es < wm_s:
-                continue
-            ev_es.append(int(es))
-            ev_hr.append(bool(hq))
+    for es, hq in _admitted_rows(pdfs, wm_s, ("es", "hr_q")):
+        ev_es.append(es)
+        ev_hr.append(hq)
 
     out: list[tuple[Any, int, str]] = []
     for w in _qualifying_wstarts(ev_es, ev_hr, length_s, slide_s):
@@ -136,14 +182,13 @@ def leading_throttle_fn(length_s: int, slide_s: int, cooldown_s: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        last, ev_es, ev_hr = state.get if state.exists else (-1, [], [])
-        last_alert, ev_es, ev_hr, alerts = leading_throttle_step(
-            last if last >= 0 else None, ev_es, ev_hr, pdfs,
+        last, ev_es, ev_hr = state.get if state.exists else (None, [], [])
+        last, ev_es, ev_hr, alerts = leading_throttle_step(
+            last, ev_es, ev_hr, pdfs,
             state.getCurrentWatermarkMs() // 1000, key[0],
             length_s, slide_s, cooldown_s,
         )
-        state.update((-1 if last_alert is None else last_alert,
-                      ev_es, ev_hr))
+        state.update((last, ev_es, ev_hr))
         yield alerts
 
     return fn
@@ -523,17 +568,10 @@ def zscore_fn(min_prior: int):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         n, s, s2 = state.get if state.exists else (0, 0, 0)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int, int]] = []
-        for pdf in pdfs:
-            for us, eid, cents in zip(
-                pdf["tus"], pdf["event_id"], pdf["cents"]
-            ):
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid), int(cents)))
-        rows.sort()
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id", "cents"),
+        )
 
         out = []
         for us, eid, cents in rows:
@@ -567,21 +605,10 @@ def zscore_stream(
     admissible input rows."""
     from pyspark.sql import functions as F
 
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-    )
-    scored = keyed.groupBy("user_id").applyInPandasWithState(
-        zscore_fn(min_prior),
-        ZSCORE_OUTPUT_SCHEMA,
-        ZSCORE_STATE_SCHEMA,
-        "append",
+    scored = _keyed_state_stream(
+        events, watermark_delay,
+        [F.round(F.col("value") * 100).cast("long").alias("cents")],
+        zscore_fn(min_prior), ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )
     zr = F.round(F.col("z_raw"), 6)
@@ -620,17 +647,10 @@ def ewma_fn(alpha: float):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         s = state.get[0] if state.exists else None
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int, int]] = []
-        for pdf in pdfs:
-            for us, eid, cents in zip(
-                pdf["tus"], pdf["event_id"], pdf["cents"]
-            ):
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid), int(cents)))
-        rows.sort()
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id", "cents"),
+        )
 
         out = []
         for us, eid, cents in rows:
@@ -658,21 +678,10 @@ def ewma_stream(
     admissible input rows."""
     from pyspark.sql import functions as F
 
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-    )
-    smoothed = keyed.groupBy("user_id").applyInPandasWithState(
-        ewma_fn(alpha),
-        EWMA_OUTPUT_SCHEMA,
-        EWMA_STATE_SCHEMA,
-        "append",
+    smoothed = _keyed_state_stream(
+        events, watermark_delay,
+        [F.round(F.col("value") * 100).cast("long").alias("cents")],
+        ewma_fn(alpha), EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )
     return smoothed.select(
@@ -732,21 +741,15 @@ def scd2_fn():
         cur, frm, n, rid = state.get if state.exists else (
             None, 0, 0, 0
         )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int, str]] = []
-        for pdf in pdfs:
-            for us, eid, et in zip(
-                pdf["tus"], pdf["event_id"], pdf["event_type"]
-            ):
-                if str(et) == "__sentinel__":
-                    continue  # clock-only row (watermark carrier)
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid), str(et)))
-        rows.sort()
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id", "event_type"),
+        )
 
         out = []
         for us, _eid, et in rows:
+            if et == "__sentinel__":
+                continue  # clock-only row (watermark carrier)
             if cur is None:
                 cur, frm, n, rid = et, us, 1, 1
             elif et == cur:
@@ -780,23 +783,9 @@ def scd2_stream(
     sentinel-driven timer flush. The sentinel row must survive any
     input filter (it carries the flushing watermark), so no pre-op
     event-type filter is applied here."""
-    from pyspark.sql import functions as F
-
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-            "event_type",
-        )
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        scd2_fn(),
-        SCD2_OUTPUT_SCHEMA,
-        SCD2_STATE_SCHEMA,
-        "append",
+    return _keyed_state_stream(
+        events, watermark_delay, ["event_type"], scd2_fn(),
+        SCD2_OUTPUT_SCHEMA, SCD2_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )
 
@@ -850,18 +839,10 @@ def attribution_fn(touch_types: tuple[str, ...], conversion_type: str,
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         tt, tus, teid = state.get if state.exists else (None, -1, -1)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int, str, float]] = []
-        for pdf in pdfs:
-            for us, eid, et, val in zip(
-                pdf["tus"], pdf["event_id"],
-                pdf["event_type"], pdf["value"],
-            ):
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid), et, float(val)))
-        rows.sort(key=lambda r: (r[0], r[1]))
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id", "event_type", "value"),
+        )
 
         out = []
         horizon_us = window_s * 1_000_000
@@ -893,24 +874,10 @@ def attribution_stream(
     """Streaming last-touch attribution — per-conversion (channel,
     value) rows; the per-channel rollup happens downstream (see
     ``pipeline.streaming_attribution``)."""
-    from pyspark.sql import functions as F
-
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-            "event_type",
-            "value",
-        )
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
+    return _keyed_state_stream(
+        events, watermark_delay, ["event_type", "value"],
         attribution_fn(touch_types, conversion_type, window_s),
-        ATTRIB_OUTPUT_SCHEMA,
-        ATTRIB_STATE_SCHEMA,
-        "append",
+        ATTRIB_OUTPUT_SCHEMA, ATTRIB_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )
 
@@ -963,16 +930,10 @@ def transition_fn(gap_s: int):
             state.get if state.exists else (None, -1, -1, None, -1, -1)
         )
 
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int, str]] = []
-        for pdf in pdfs:
-            for us, eid, et in zip(
-                pdf["tus"], pdf["event_id"], pdf["event_type"]
-            ):
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid), et))
-        rows.sort(key=lambda r: (r[0], r[1]))
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id", "event_type"),
+        )
 
         out = []
         gap_us = gap_s * 1_000_000
@@ -1044,15 +1005,10 @@ def cadence_fn():
             state.get if state.exists else (-1, -1, 0, 0, 0, 0)
         )
         s2 = hi * _S2_SPLIT + lo
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        rows: list[tuple[int, int]] = []
-        for pdf in pdfs:
-            for us, eid in zip(pdf["tus"], pdf["event_id"]):
-                if wm_us > 0 and int(us) < wm_us:
-                    continue  # late (F6/W4)
-                rows.append((int(us), int(eid)))
-        rows.sort()
+        rows = _admitted_rows(
+            pdfs, state.getCurrentWatermarkMs() * 1000,
+            ("tus", "event_id"),
+        )
 
         emitted = False
         for us, eid in rows:
@@ -1087,22 +1043,9 @@ def cadence_stream(
     the ``streaming_user_cadence`` twin; one snapshot row per
     (user, batch-with-data), finished engine-side by the shared
     ``cadence_finish`` dag."""
-    from pyspark.sql import functions as F
-
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-        )
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        cadence_fn(),
-        CADENCE_OUTPUT_SCHEMA,
-        CADENCE_STATE_SCHEMA,
-        "append",
+    return _keyed_state_stream(
+        events, watermark_delay, [], cadence_fn(),
+        CADENCE_OUTPUT_SCHEMA, CADENCE_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )
 
@@ -1261,22 +1204,8 @@ def transition_stream(
     """Streaming journey-step emission — one row per in-gap
     transition; the Markov-matrix rollup happens downstream (see
     ``pipeline.streaming_transitions``)."""
-    from pyspark.sql import functions as F
-
-    keyed = (
-        events.withWatermark("ts", watermark_delay)
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("tus"),
-            "event_type",
-        )
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        transition_fn(gap_s),
-        TRANSITION_OUTPUT_SCHEMA,
-        TRANSITION_STATE_SCHEMA,
-        "append",
+    return _keyed_state_stream(
+        events, watermark_delay, ["event_type"], transition_fn(gap_s),
+        TRANSITION_OUTPUT_SCHEMA, TRANSITION_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )

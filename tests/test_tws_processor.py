@@ -152,7 +152,7 @@ def test_tws_adapter_matches_apply_in_pandas_adapter():
                                                      name=None))
         last, ev_es, ev_hr = gs.get
         assert proc.history.rows == list(zip(ev_es, ev_hr))
-        assert proc.last_alert.get() == (None if last < 0 else (last,))
+        assert proc.last_alert.get() == (None if last is None else (last,))
         emitted.append([w for _, w, _ in tws_rows])
 
     # first qualifying window B-7; re-armed at B+32 > B-7 + C
@@ -162,3 +162,25 @@ def test_tws_adapter_matches_apply_in_pandas_adapter():
     assert proc.history.rows == [
         (B + 40, False), (B + 41, True), (B + 45, True),
     ]
+
+
+def test_apply_in_pandas_adapter_stores_null_for_never_alerted():
+    """``STATE_SCHEMA`` stores "never alerted" as null, so a window
+    starting before the epoch is an ordinary last alert: over
+    [(0, bp), (2, hr)] then [(3, bp), (4, hr)] (L=5, S=1, C=30) the
+    first batch alerts window -2 and the second stays inside its
+    cooldown, so -2 is emitted once."""
+    fn = leading_throttle_fn(5, 1, 30)
+    gs = FakeGroupState()
+    emitted = []
+    for rows in ([(0, False), (2, True)], [(3, False), (4, True)]):
+        pdf = pd.DataFrame({
+            "user_id": [1] * len(rows),
+            "es": [e for e, _ in rows],
+            "hr_q": [h for _, h in rows],
+            "bp_q": [not h for _, h in rows],
+        })
+        out = pd.concat(list(fn((1,), iter([pdf]), gs)))
+        emitted.append(out["alert_epoch"].tolist())
+    assert emitted == [[-2], []]
+    assert gs.get[0] == -2
