@@ -13,7 +13,14 @@ deterministic and oracle-comparable.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -85,10 +92,12 @@ DEFAULT_CONFS: dict[str, str] = {
     # in the same File.renameTo that FileSystem.rename calls, so
     # `file:` had no atomic no-overwrite rename to lose, and the
     # checksum files (Spark's N.delta.crc, Hadoop's hidden .crc) stay
-    # on. On HDFS FileContext.rename IS atomic, so host sessions
-    # (which may checkpoint there) keep Spark's default:
+    # on. The other per-file fork, `chmod` on every create, goes with
+    # the fork-free `file:` FileSystem local sessions get
+    # (``_session_confs``). On HDFS FileContext.rename IS atomic, so
+    # host sessions (which may checkpoint there) keep Spark's default:
     # tune_session's prefix filter skips spark.sql.streaming.
-    # Numbers: CHANGES.md, checkpoint-manager entry.
+    # Numbers: CHANGES.md, checkpoint-manager and fork-free-FS entries.
     "spark.sql.streaming.checkpointFileManagerClass": (
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
@@ -137,12 +146,128 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in {**DEFAULT_CONFS, **(extra_confs or {})}.items():
+    for k, v in _session_confs(master, extra_confs).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
+
+
+# A local session's `file:` FileSystem: Hadoop's LocalFileSystem with
+# a raw layer whose setPermission sets the nine mode bits through
+# java.nio instead of forking `chmod` (Hadoop's fallback when native
+# libhadoop is missing): about 54 forks per micro-batch of the paper's
+# pipeline, on every state-store delta, log entry and sink file and
+# their hidden .crc files. It stays a ChecksumFileSystem, and a
+# sticky-bit request still goes through Hadoop's own code. It replaces
+# the class Spark would pick by ServiceLoader, which in the PySpark
+# distribution is Hive's ProxyLocalFileSystem: that one refuses to
+# rename onto an existing file, so an overwriting checkpoint write
+# (createAtomic with overwriteIfPossible) kept the old bytes; here it
+# replaces them, as on HDFS. The source ships in the package;
+# ``_fork_free_fs_jar`` compiles it once per source and javac, and
+# without javac sessions keep the stock class.
+_FORK_FREE_FS_CLASS = "bspe.fs.ForkFreeLocalFileSystem"
+_FORK_FREE_FS_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm",
+    "ForkFreeLocalFileSystem.java",
+)
+
+
+def _session_confs(master: str,
+                   extra_confs: dict[str, str] | None) -> dict[str, str]:
+    """The confs ``get_spark`` builds its session with: DEFAULT_CONFS,
+    the caller's, and for a local master the fork-free ``file:``
+    FileSystem whenever the session's JVM can load it. Executors of
+    ``local-cluster`` masters are JVMs of their own without the jar."""
+    confs = {**DEFAULT_CONFS, **(extra_confs or {})}
+    local = master == "local" or master.startswith("local[")
+    jar = _fork_free_fs_jar() if local else None
+    if jar and _gateway_can_load_fork_free_fs():
+        cp = confs.get("spark.driver.extraClassPath")
+        confs["spark.driver.extraClassPath"] = (
+            f"{cp}{os.pathsep}{jar}" if cp else jar
+        )
+        confs.setdefault("spark.hadoop.fs.file.impl", _FORK_FREE_FS_CLASS)
+    return confs
+
+
+def _gateway_can_load_fork_free_fs() -> bool:
+    """True when no JVM runs yet (the next launch puts the jar on its
+    class path) or the running one finds the class. A gateway JVM
+    launched outside this process (``spark-submit``) never has it."""
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    try:
+        gateway.jvm.java.lang.Class.forName(_FORK_FREE_FS_CLASS)
+        return True
+    except Py4JError:  # ClassNotFoundException, or the gateway is gone
+        return False
+
+
+@functools.lru_cache(maxsize=None)
+def _fork_free_fs_jar() -> str | None:
+    """Path of the jar holding ``_FORK_FREE_FS_CLASS``, or None when it
+    cannot be built. The jar is cached per user under a hash of the
+    source and the javac release, published by atomic rename; a failed
+    compile leaves a ``.failed`` file with javac's output so the same
+    javac is not retried. Memoized, so session restarts in one process
+    cost nothing."""
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    javac = os.path.realpath(javac)
+    try:
+        with open(os.path.join(os.path.dirname(os.path.dirname(javac)),
+                               "release"), "rb") as f:
+            release = f.read()  # JAVA_VERSION=... of javac's JDK
+    except OSError:
+        release = b""
+    with open(_FORK_FREE_FS_SOURCE, "rb") as f:
+        digest = hashlib.sha256(
+            f.read() + javac.encode() + release
+        ).hexdigest()[:16]
+    cache = os.path.join(os.path.expanduser("~"), ".cache",
+                         "biometric_stream_processing_spark")
+    jar = os.path.join(cache, f"fork-free-local-fs-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    if os.path.exists(jar + ".failed"):
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    hadoop_jars = glob.glob(
+        os.path.join(_find_spark_home(), "jars", "hadoop-*.jar")
+    )
+    try:
+        os.makedirs(cache, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=cache) as tmp:
+            classes = os.path.join(tmp, "classes")
+            proc = subprocess.run(
+                [javac, "--release", "17", "-nowarn",
+                 "-cp", os.pathsep.join(hadoop_jars), "-d", classes,
+                 _FORK_FREE_FS_SOURCE],
+                capture_output=True, text=True, timeout=300,
+            )
+            if proc.returncode != 0:
+                with open(jar + ".failed", "w") as f:
+                    f.write(proc.stdout + proc.stderr)
+                return None
+            staged = os.path.join(tmp, "staged.jar")
+            with zipfile.ZipFile(staged, "w") as zf:
+                for dirpath, _dirnames, filenames in os.walk(classes):
+                    for fn in filenames:
+                        full = os.path.join(dirpath, fn)
+                        zf.write(full, os.path.relpath(full, classes))
+            os.replace(staged, jar)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return jar
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -177,10 +302,6 @@ def _ship_package(spark: SparkSession) -> None:
     mechanism a real cluster deployment uses (``--py-files``) — one
     zip per session, shipped once, appended to every executor's
     ``sys.path``."""
-    import shutil
-    import tempfile
-    import zipfile
-
     marker = "_bspe_pkg_shipped"
     try:
         sc = spark.sparkContext

@@ -37,7 +37,9 @@ deltas, offset and commit logs) whatever their size.
 ``get_spark`` sessions write those files through the FileSystem-based
 checkpoint manager (``session.DEFAULT_CONFS``), which keeps the local
 filesystem from forking ``readlink`` per file; a host session on HDFS
-keeps Spark's atomic ``FileContext`` default.
+keeps Spark's atomic ``FileContext`` default. Local ``get_spark``
+sessions also set file modes in-process (``session._session_confs``)
+instead of forking ``chmod`` for each checkpoint and sink file.
 """
 
 from __future__ import annotations

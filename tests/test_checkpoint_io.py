@@ -1,20 +1,24 @@
 """Pins on the streaming checkpoint path of ``get_spark`` sessions.
 
-1. Fork count: local sessions write checkpoints (offset, commit and
+1. Fork counts: local sessions write checkpoints (offset, commit and
    source logs, state-store deltas) through Spark's FileSystem-based
-   checkpoint file manager. The FileContext-based default forks a
-   ``readlink`` process for each existence check inside every rename,
-   hundreds per query here. The pin puts a logging ``readlink`` wrapper
-   first on the child JVM's ``PATH`` and asserts that no logged call
-   names a path under the checkpoint dir. It counts calls, it times
-   nothing, so its result repeats exactly.
+   checkpoint file manager, whose ``file:`` FileSystem sets file modes
+   in-process. The FileContext-based default forks a ``readlink``
+   process for each existence check inside every rename, and Hadoop's
+   stock ``LocalFileSystem`` (without native libhadoop) forks a
+   ``chmod`` for every file and directory it creates; both come to
+   hundreds per query here. One run puts logging ``readlink`` and
+   ``chmod`` wrappers first on the child JVM's ``PATH``; the pins
+   assert that no logged call names a path under the checkpoint dir,
+   nor, for ``chmod``, under the sink's output dir. They count calls,
+   they time nothing, so their results repeat exactly.
 2. Integrity: the FileSystem path keeps corruption detection. Spark's
-   ``N.delta.crc`` checksum files are written, and a restart in a fresh
-   JVM from a checkpoint whose newest committed ``N.delta`` has one
-   flipped byte fails with a checksum error, with or without Hadoop's
-   hidden ``.crc`` file.
+   ``N.delta.crc`` and Hadoop's hidden ``.N.delta.crc`` checksum files
+   are written, and a restart in a fresh JVM from a checkpoint whose
+   newest committed ``N.delta`` has one flipped byte fails with a
+   checksum error, with or without Hadoop's hidden ``.crc`` file.
 
-Each query runs in a subprocess: the fork pin needs its own ``PATH``,
+Each query runs in a subprocess: the fork pins need their own ``PATH``,
 and the restart needs a JVM that has not cached the state store.
 """
 
@@ -25,6 +29,8 @@ import os
 import shutil
 import subprocess
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -99,39 +105,71 @@ def _run_query(work: str, first: int, last: int,
     return json.loads(proc.stdout.strip().splitlines()[-1])["error"]
 
 
-def test_local_checkpoint_writes_fork_no_readlink(tmp_path):
+@pytest.fixture(scope="module")
+def logged_run(tmp_path_factory):
+    """One run of the query with logging ``readlink`` and ``chmod``
+    wrappers first on the child's ``PATH``: (work dir, {tool: log})."""
+    tmp = tmp_path_factory.mktemp("forks")
+    bindir = tmp / "bin"
+    bindir.mkdir()
+    work = os.path.realpath(tmp / "work")
+    os.makedirs(work)
+    env = {**os.environ, "PATH": f"{bindir}{os.pathsep}{os.environ['PATH']}"}
+    logs = {}
+    for tool, canary, echoed in (("readlink", ["-f", work], work),
+                                 ("chmod", ["u+w", work], "")):
+        real = shutil.which(tool)
+        assert real, f"{tool} not on PATH"
+        log = logs[tool] = tmp / f"{tool}.log"
+        wrapper = bindir / tool
+        wrapper.write_text(
+            "#!/bin/sh\n"
+            f"printf '%s\\n' \"$*\" >> '{log}'\n"
+            f"exec '{real}' \"$@\"\n"
+        )
+        wrapper.chmod(0o755)
+        # the wrapper is live in the child's environment
+        proc = subprocess.run([tool, *canary], env=env,
+                              capture_output=True, text=True, check=True)
+        assert proc.stdout.strip() == echoed, tool
+        assert work in log.read_text(), tool
+    assert _run_query(work, 1, 3, env) is None
+    assert os.path.isdir(os.path.join(work, "ckpt", "state", "0", "0"))
+    return work, logs
+
+
+def test_local_checkpoint_writes_fork_no_readlink(logged_run):
     """At Spark's default checkpoint manager this logs hundreds of
     ``readlink`` calls on checkpoint files; with the FileSystem-based
     manager it logs none."""
-    real = shutil.which("readlink")
-    assert real, "readlink not on PATH"
-    bindir, log = tmp_path / "bin", tmp_path / "readlink.log"
-    bindir.mkdir()
-    wrapper = bindir / "readlink"
-    wrapper.write_text(
-        "#!/bin/sh\n"
-        f"printf '%s\\n' \"$*\" >> '{log}'\n"
-        f"exec '{real}' \"$@\"\n"
-    )
-    wrapper.chmod(0o755)
-    work = os.path.realpath(tmp_path / "work")
-    os.makedirs(work)
-    env = {**os.environ, "PATH": f"{bindir}{os.pathsep}{os.environ['PATH']}"}
-
-    # the wrapper is live in the child's environment
-    canary = subprocess.run(["readlink", "-f", work], env=env,
-                            capture_output=True, text=True, check=True)
-    assert canary.stdout.strip() == work
-    assert work in log.read_text()
-
-    assert _run_query(work, 1, 3, env) is None
+    work, logs = logged_run
     ckpt = os.path.join(work, "ckpt")
-    assert os.path.isdir(os.path.join(ckpt, "state", "0", "0"))
-    on_ckpt = [ln for ln in log.read_text().splitlines() if ckpt in ln]
+    on_ckpt = [ln for ln in logs["readlink"].read_text().splitlines()
+               if ckpt in ln]
     assert not on_ckpt, (
         f"{len(on_ckpt)} readlink forks on checkpoint files, e.g. "
         f"{on_ckpt[:5]}"
     )
+
+
+def test_local_writes_fork_no_chmod(logged_run):
+    """Hadoop's stock ``LocalFileSystem`` logs dozens of ``chmod`` calls
+    per micro-batch here; the session's fork-free ``file:`` FileSystem
+    logs none on checkpoint or sink files, and its checksum layer still
+    writes Hadoop's hidden ``.N.delta.crc``."""
+    work, logs = logged_run
+    ckpt, out = os.path.join(work, "ckpt"), os.path.join(work, "out")
+    forks = [ln for ln in logs["chmod"].read_text().splitlines()
+             if ckpt in ln or out in ln]
+    assert not forks, (
+        f"{len(forks)} chmod forks on checkpoint or sink files, e.g. "
+        f"{forks[:5]}"
+    )
+    assert os.listdir(out)
+    part = os.path.join(ckpt, "state", "0", "0")
+    newest = max(int(n.split(".")[0]) for n in os.listdir(part)
+                 if n.endswith(".delta"))
+    assert os.path.exists(os.path.join(part, f".{newest}.delta.crc"))
 
 
 def test_corrupt_state_delta_fails_restart_with_checksum_error(tmp_path):
