@@ -175,14 +175,35 @@ _FORK_FREE_FS_SOURCE = os.path.join(
 )
 
 
+# A local session's Python daemon: Spark's stock daemon behind a
+# zipimport that re-reads an archive on the workers' path only when it
+# changed, instead of at the start of every task (the module's
+# docstring says why). Spark runs it as ``python -m`` with this
+# directory merged into the daemon's PYTHONPATH.
+_PY_DAEMON_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "pyworker"
+)
+_PY_DAEMON_MODULE = "bspe_daemon"
+
+
 def _session_confs(master: str,
                    extra_confs: dict[str, str] | None) -> dict[str, str]:
     """The confs ``get_spark`` builds its session with: DEFAULT_CONFS,
-    the caller's, and for a local master the fork-free ``file:``
-    FileSystem whenever the session's JVM can load it. Executors of
-    ``local-cluster`` masters are JVMs of their own without the jar."""
+    the caller's, and for a local master the package's Python daemon
+    and the fork-free ``file:`` FileSystem whenever the session's JVM
+    can load it. Executors of other masters are JVMs of their own
+    without the jar, possibly on hosts without this package's files,
+    so they keep Spark's stock class and daemon."""
     confs = {**DEFAULT_CONFS, **(extra_confs or {})}
     local = master == "local" or master.startswith("local[")
+    if local and os.path.exists(
+        os.path.join(_PY_DAEMON_DIR, _PY_DAEMON_MODULE + ".py")
+    ):
+        confs.setdefault("spark.python.daemon.module", _PY_DAEMON_MODULE)
+        pp = confs.get("spark.executorEnv.PYTHONPATH")
+        confs["spark.executorEnv.PYTHONPATH"] = (
+            f"{pp}{os.pathsep}{_PY_DAEMON_DIR}" if pp else _PY_DAEMON_DIR
+        )
     jar = _fork_free_fs_jar() if local else None
     if jar and _gateway_can_load_fork_free_fs():
         cp = confs.get("spark.driver.extraClassPath")
