@@ -139,8 +139,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # then first-verdicts for the queue, then source-changed
     # re-verifications, then oldest-fresh fills. Registration order
     # is also bench order, so shared-subtree owners precede their
-    # composites (billing annotated per round in BENCH_DETAIL via
-    # bench.py's MEMO_OWNERS map).
+    # composites (the bench records each shared memo's first consumer
+    # in BENCH_DETAIL's memo_owner_observed).
     #
     # ROUND 19 (recorded rounds r1-r7, r9-r18): r16 leaves the
     # window when this round records (post-recording window
@@ -157,15 +157,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # The other five state-kernel ports (streaming_anomalies,
     # streaming_ewma, streaming_state_history, streaming_attribution,
     # streaming_transitions) are already in the due block.
-    # MEMO_OWNERS moves (bench.py map, taken from the bench's
-    # observed-owner probes for this order): training_corpus (front 2)
-    # now owns the clean corpus and the LSH candidates besides its
-    # rows, doc_repetition_stats (front 3) the doc-term matrix,
-    # embedding_dup_clusters (front 8) the embedding closure and the
-    # IVF cells, near_dup_representatives (front 9) the text closure,
-    # embedding_kmeans_cells (front 37) the kmeans map and
-    # doc_unigram_logprob (front 46) the unigram scorer; the decontam
-    # pair, the training rows and the winnow sketch keep their owners.
     front = [
         # --- last green r16 (oldest debt) IN ITS r16 GATE ORDER —
         # 49 entries ---

@@ -123,73 +123,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Shared-subtree FIRST-CONSUMER billing for THIS round's registration
-# order (round-5 verdict item: memo-bill moves must be annotated, not
-# reconstructed by the judge). Each shared stage — the bench's lazy
-# persist list above plus the module-side memos in plans/ — is paid
-# in full by the first query in registration order that materializes
-# it (the lazy persist list in main(), or a plans/-module memo);
-# every later consumer reads cached blocks. Recorded into
-# BENCH_DETAIL_r<N>.json so round-over-round per-query diffs separate
-# real regressions from billing shifts. "prev" = last round's owner.
-MEMO_OWNERS = {
-    # Round-19 registration: the 49-entry r16-green obligation block
-    # leads IN ITS r16 GATE ORDER + the streaming_user_cadence spare
-    # at position 50; the tail keeps the r17 block ahead of the r18
-    # block (the round-18 front). "prev" = the round-18 owner. Every
-    # owner below is the bench's observed first consumer for this
-    # order (mismatch list empty). Eight of the twelve bills move:
-    # the r16 block now runs first, so its entries take the memos the
-    # r15 block owned in round 18.
-    "decontam_gram_index": {
-        "owner": "decontaminated_train_docs",
-        "prev": "decontaminated_train_docs"},
-    "decontam_survivors": {
-        "owner": "decontaminated_train_docs",
-        "prev": "decontaminated_train_docs"},
-    # training_corpus (front 2) is the first entry to read the clean
-    # corpus and the LSH candidates, so it pays both besides its rows.
-    "training_corpus_rows": {
-        "owner": "training_corpus",
-        "prev": "training_corpus"},
-    "clean_corpus": {
-        "owner": "training_corpus",
-        "prev": "corpus_token_budget"},
-    "text_lsh_pairs": {
-        "owner": "training_corpus",
-        "prev": "minhash_lsh_pairs"},
-    # doc_repetition_stats (front 3) is the first doc-term reader; the
-    # unigram scorer falls to doc_unigram_logprob (front 46), ahead of
-    # doc_perplexity_buckets (r18 tail block).
-    "doc_term_matrix": {
-        "owner": "doc_repetition_stats",
-        "prev": "doc_perplexity_buckets"},
-    "unigram_scores": {
-        "owner": "doc_unigram_logprob",
-        "prev": "doc_perplexity_buckets"},
-    # embedding_dup_clusters (front 8) builds the embedding closure,
-    # whose candidate pairs read the IVF cells.
-    "embedding_cluster_closure": {
-        "owner": "embedding_dup_clusters",
-        "prev": "cross_modal_dup_agreement"},
-    "ivf_cell_assignment": {
-        "owner": "embedding_dup_clusters",
-        "prev": "embedding_ivf_topk"},
-    "text_cluster_closure": {
-        "owner": "near_dup_representatives",
-        "prev": "near_dup_clusters"},
-    # embedding_kmeans_cells (front 37) now precedes
-    # embedding_kmeans_quality (r18 tail block).
-    "kmeans_training_and_assignment_map": {
-        "owner": "embedding_kmeans_cells",
-        "prev": "embedding_kmeans_quality"},
-    # winnow sketch: both consumers sit in the r17 tail block in
-    # their r14 relative order (winnow before contamination)
-    "winnow_fingerprints": {
-        "owner": "doc_winnow_fingerprints",
-        "prev": "doc_winnow_fingerprints"},
-}
-
 BENCH_CONFS = {
     "spark.sql.shuffle.partitions":
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"),
@@ -293,15 +226,100 @@ def _gc_millis(spark) -> "int | None":
         return None
 
 
+def _keyed_memos(key: tuple) -> set[str]:
+    """Names (``module._NAME``) of the module-level dicts of the loaded
+    package modules that hold ``key``, the ``memo.session_memo`` key
+    ``(applicationId, realpath(sf_dir))``: the shared memos built for
+    this session and data directory. Observed, not listed, so a new
+    memo is billed without a bench edit."""
+    return {
+        f"{mod_name.rpartition('.')[2]}.{attr}"
+        for mod_name, mod in list(sys.modules.items())
+        if mod_name.startswith("biometric_stream_processing_spark.")
+        and mod is not None
+        for attr, val in list(vars(mod).items())
+        if isinstance(val, dict) and key in val
+    }
+
+
+def _cache_probe(spark, df):
+    """A probe that turns true once ``df``'s persisted buffers are
+    loaded, i.e. once a query has paid for the frame."""
+    jdf = df._jdf
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def probe() -> bool:
+        # fail-soft: a py4j surface change must cost the observed
+        # record, never the bench run itself
+        try:
+            cd = cm.lookupCachedData(jdf)
+            return bool(
+                cd.isDefined()
+                and cd.get().cachedRepresentation().cacheBuilder()
+                .isCachedColumnBuffersLoaded()
+            )
+        except Exception:
+            return False
+    return probe
+
+
+class _MemoLedger:
+    """First-consumer billing of the shared subtrees, observed.
+
+    Building it marks the bench's four shared frames ``persist()``-ed,
+    LAZILY: the first consumer of each pays the compute inside its
+    timed window and later consumers read cached blocks. ``prekeyed``
+    holds the memo dicts
+    that building those frames keyed; they are lazy plan memos whose
+    compute the frames themselves bill.
+
+    ``owners`` maps each memo dict or frame to the first timed entry
+    after which it is built (a dict holds the session key, a frame's
+    buffers are loaded). Whatever is built before the loop, other
+    than ``prekeyed``, was paid off the clock and reads
+    ``__prebuilt__``: a bench bug."""
+
+    def __init__(self, spark, sf_dir: str):
+        from biometric_stream_processing_spark.plans.documents_ops import (
+            doc_winnow_fingerprints,
+            documents_clean_corpus,
+            minhash_lsh_pairs,
+            shared_ivf_cells,
+        )
+
+        self._key = (
+            spark.sparkContext.applicationId, os.path.realpath(sf_dir)
+        )
+        keyed_before = _keyed_memos(self._key)
+        self.frames = {
+            label: build(spark, sf_dir).persist()
+            for label, build in (
+                ("text_lsh_pairs", minhash_lsh_pairs),
+                ("ivf_cell_assignment", shared_ivf_cells),
+                ("winnow_fingerprints", doc_winnow_fingerprints),
+                ("clean_corpus", documents_clean_corpus),
+            )
+        }
+        self.prekeyed = _keyed_memos(self._key) - keyed_before
+        self._probes = {
+            label: _cache_probe(spark, df)
+            for label, df in self.frames.items()
+        }
+        self.owners = dict.fromkeys(self._built(), "__prebuilt__")
+
+    def _built(self) -> set[str]:
+        return (_keyed_memos(self._key) - self.prekeyed) | {
+            label for label, probe in self._probes.items() if probe()
+        }
+
+    def bill(self, entry: str) -> None:
+        for memo in self._built():
+            self.owners.setdefault(memo, entry)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
-    from biometric_stream_processing_spark.plans.documents_ops import (
-        doc_winnow_fingerprints,
-        documents_clean_corpus,
-        minhash_lsh_pairs,
-        shared_ivf_cells,
-    )
     from biometric_stream_processing_spark.session import get_spark
 
     spark = get_spark("bench", extra_confs=BENCH_CONFS)
@@ -346,105 +364,13 @@ def main() -> None:
         qs["doc_winnow_fingerprints"](spark, warm_sf).count()
         qs["decontaminated_train_docs"](spark, warm_sf).count()
 
-    # Mark the shared LSH candidate-pair and IVF cell-assignment
-    # stages cacheable — LAZILY: no action here, so the first consumer
-    # of each pays the whole compute on the clock and the second
-    # reuses it (cache-manager plan substitution on the equal
-    # subtree).
-    pairs = minhash_lsh_pairs(spark, sf_dir)
-    pairs.persist()
-    cells = shared_ivf_cells(spark, sf_dir)
-    cells.persist()
-    fps = doc_winnow_fingerprints(spark, sf_dir)
-    fps.persist()
-    # the clean corpus feeds four consumers (its own gate entry, the
-    # token-budget selection, the training-corpus capstone, the funnel
-    # report); lazy like the others — who pays the chain on the clock
-    # is whoever runs first in the CURRENT registration order, always
-    # recorded as MEMO_OWNERS "clean_corpus" above (round 8: the
-    # token-budget selection, front position 10)
-    clean = documents_clean_corpus(spark, sf_dir)
-    clean.persist()
-    # (The cluster table — shared by near_dup_clusters and
-    # near_dup_representatives — cannot be persisted here: the
-    # connected-components loop is EAGER, so building the frame would
-    # run the whole closure off the clock. It is memoized inside
-    # plans/documents_ops instead; the FIRST timed consumer pays.
-    # The decontamination gram index — shared by
-    # decontaminated_train_docs and training_corpus — is likewise
-    # memoized module-side with a lazy localCheckpoint, and the
-    # k-means final-assignment map stage — shared by
-    # embedding_kmeans_quality and embedding_kmeans_cells — is
-    # memoized module-side with a persist (building it calls the
-    # eager training loop, so it too cannot sit in this list): first
-    # timed consumer materializes, the second reads blocks. The
-    # CURRENT round's first consumer per shared stage is the
-    # MEMO_OWNERS map above — the authoritative billing record the
-    # bench emits into BENCH_DETAIL.)
-
-    # OBSERVED memo billing (round 12): MEMO_OWNERS above is a
-    # hand-derived prediction of which query pays each shared build —
-    # twice now a rotation note mis-derived adjacent arithmetic, so
-    # the bench now also RECORDS the owner it actually saw. Two probe
-    # kinds: the four lazily-persisted frames flip
-    # isCachedColumnBuffersLoaded() when their buffers materialize
-    # (the cost landing on the clock), and the module session-memos
-    # gain their (appId, sf_dir) key inside the first consumer's
-    # timed call (eager memos pay right there; lazy ones build plan
-    # AND execute within the same timed window, so attribution
-    # holds). The observed map is written next to the declared one,
-    # plus an explicit mismatch list — drift between them is the
-    # alarm that a rotation note needs re-deriving.
-    def _cache_probe(df):
-        jdf = df._jdf
-        cm = spark._jsparkSession.sharedState().cacheManager()
-
-        def probe() -> bool:
-            # fail-soft: a py4j surface change must cost the observed
-            # record, never the bench run itself
-            try:
-                cd = cm.lookupCachedData(jdf)
-                return bool(
-                    cd.isDefined()
-                    and cd.get().cachedRepresentation().cacheBuilder()
-                    .isCachedColumnBuffersLoaded()
-                )
-            except Exception:
-                return False
-        return probe
-
-    def _dict_probe(*dicts):
-        key = (spark.sparkContext.applicationId,
-               os.path.realpath(sf_dir))
-
-        def probe() -> bool:
-            return any(key in d for d in dicts)
-        return probe
-
-    from biometric_stream_processing_spark.plans import (
-        corpus_ops as _c,
-        documents_ops as _d,
-    )
-    memo_probes = {
-        "text_lsh_pairs": _cache_probe(pairs),
-        "ivf_cell_assignment": _cache_probe(cells),
-        "winnow_fingerprints": _cache_probe(fps),
-        "clean_corpus": _cache_probe(clean),
-        "doc_term_matrix": _dict_probe(_c._TF_CACHE),
-        "unigram_scores": _dict_probe(_c._LP_CACHE),
-        "text_cluster_closure": _dict_probe(_d._CLUSTERS_CACHE),
-        "embedding_cluster_closure": _dict_probe(_d._EMB_CLUSTERS_CACHE),
-        "decontam_gram_index": _dict_probe(_d._DECONTAM_CACHE),
-        "decontam_survivors": _dict_probe(_d._DECONTAM_CACHE),
-        "training_corpus_rows": _dict_probe(_d._TRAINING_CACHE),
-        "kmeans_training_and_assignment_map": _dict_probe(
-            _d._KMEANS_CACHE, _d._KMEANS_ASSIGN_CACHE
-        ),
-    }
-    observed: dict[str, str] = {}
-    for m, probe in memo_probes.items():
-        if probe():  # built off the clock before the loop — a bug
-            observed[m] = "__prebuilt__"
+    # The shared LSH candidate pairs, IVF cell assignment, winnow
+    # sketch and clean corpus are persisted lazily here. Stages that
+    # cannot sit in this list because building them runs an eager
+    # loop (the connected-components closures, k-means training) are
+    # memoized module-side instead; the first timed consumer pays for
+    # them either way, and the ledger records who that was.
+    memos = _MemoLedger(spark, sf_dir)
 
     # SPARK_GRAFT_BENCH_PROGRESS=1: per-query stderr markers so a
     # crashed (unretryable) bench run identifies WHICH query died —
@@ -462,28 +388,13 @@ def main() -> None:
         dt = time.time() - t0
         timings[name] = round(dt, 3)
         total += dt
-        for m, probe in memo_probes.items():
-            if m not in observed and probe():
-                observed[m] = name
-    if os.environ.get("SPARK_GRAFT_BENCH_DEBUG_MEMOS") == "1":
-        print(f"memo_owner_observed: {observed}", file=sys.stderr)
-    # declared-but-unobserved memos (round-12 advice): a memo whose
-    # probe never fires during the timed loop means the billing
-    # reverted to unverified trust (its build path changed, its probe
-    # rotted, or its owner query was removed) — flag it with the same
-    # alarm instead of silently dropping it from the observed map
-    mismatches = sorted(
-        f"{m}: {observed.get(m, '<unobserved>')} != "
-        f"{MEMO_OWNERS.get(m, {}).get('owner')}"
-        for m in set(observed) | set(MEMO_OWNERS)
-        if observed.get(m) != MEMO_OWNERS.get(m, {}).get("owner")
+        memos.bill(name)
+    prebuilt = sorted(
+        m for m, owner in memos.owners.items() if owner == "__prebuilt__"
     )
-    if mismatches:
-        print(
-            "WARN memo owner mismatch (observed != declared): "
-            + ", ".join(mismatches),
-            file=sys.stderr,
-        )
+    if prebuilt:
+        print("WARN memos built off the clock, before the timed loop: "
+              + ", ".join(prebuilt), file=sys.stderr)
     # WARM SECOND PASS (round 11; streaming excluded round 12): three
     # consecutive verdicts spent effort adjudicating "in-bench drift"
     # that fresh isolated A/Bs then attributed to first-call/position
@@ -540,10 +451,8 @@ def main() -> None:
             if g0 is not None and g1 is not None and g1 > g0:
                 warm_gc[name] = g1 - g0
     gc_after_warm = _gc_millis(spark)
-    pairs.unpersist()
-    cells.unpersist()
-    fps.unpersist()
-    clean.unpersist()
+    for df in memos.frames.values():
+        df.unpersist()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -593,8 +502,8 @@ def main() -> None:
         with open(detail, "w") as f:
             payload = {"queries": timings, "sf": sf_val,
                        "total": round(total, 3),
-                       "memo_owner": MEMO_OWNERS,
-                       "memo_owner_observed": observed,
+                       "memo_owner_observed": memos.owners,
+                       "memo_prekeyed": sorted(memos.prekeyed),
                        # loop position per query (0-based registration
                        # order — also the warm-loop order, which skips
                        # streaming entries but preserves it): round-15
@@ -620,8 +529,6 @@ def main() -> None:
                         gc_after_warm - gc_after_first
                     )
                 payload["gc"] = gc_info
-            if mismatches:
-                payload["memo_owner_mismatch"] = mismatches
             if warm:
                 # batch-only by construction (streaming skipped
                 # above), so total_warm is a sum of genuinely warm

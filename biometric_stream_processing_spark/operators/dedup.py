@@ -706,7 +706,13 @@ def pagerank(
     keyed aggregation on dst — the standard mass-passing shape; at
     ``iters`` = 3 the chain stays one lazy plan (no checkpoint
     needed; the components loop's lineage concern starts an order of
-    magnitude deeper)."""
+    magnitude deeper).
+
+    The symmetrized edge list is checkpointed EAGERLY: one AQE query
+    runs its broadcast and shuffle jobs concurrently over it, and a
+    lazy checkpoint completed by one job clears the RDD's lineage
+    while another job's submission walks it (``RDD.dependencies()``
+    returns null inside the DAGScheduler)."""
     sym = (
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(
@@ -714,7 +720,7 @@ def pagerank(
                          F.col(a_col).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=False)      # reused iters+1 times
+        .localCheckpoint()      # reused iters+1 times
     )
     deg = sym.groupBy("src").agg(F.count("*").alias("_deg"))
     nodes = sym.select(F.col("src").alias("node")).distinct()

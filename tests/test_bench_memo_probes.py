@@ -1,57 +1,142 @@
-"""The bench memo-observation probes (bench.py round 12) reference
-module cache dicts by name; a rename would crash the DRIVER's bench
-run at round close — the one run per round that cannot be retried.
-Parse bench.py's probe section and assert every referenced attribute
-still exists with the memo-dict shape, so the break is caught in CI
-instead."""
+"""Pins on bench.py's telemetry: the observed shared-memo billing,
+the GC probe, the driver-heap pin and the BENCH_DETAIL fields that
+tools/weak_walls.py reads. The driver's bench run at round close
+cannot be retried, so a break here must surface in CI."""
 
 from __future__ import annotations
 
-import re
+import ast
+import importlib
+import os
+import shutil
+import sys
 from pathlib import Path
 
+import pytest
+
 BENCH = Path(__file__).resolve().parents[1] / "bench.py"
+PACKAGE = BENCH.parent / "biometric_stream_processing_spark"
+SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_bench_probe_cache_attrs_resolve():
-    src = BENCH.read_text()
-    from biometric_stream_processing_spark.plans import (
-        corpus_ops,
-        documents_ops,
-    )
+def _package_dicts():
+    """Every module-level dict of the loaded package modules."""
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("biometric_stream_processing_spark.") and mod:
+            for val in list(vars(mod).values()):
+                if isinstance(val, dict):
+                    yield val
 
-    mods = {"_c": corpus_ops, "_d": documents_ops}
-    refs = re.findall(r"\b(_c|_d)\.(_[A-Z_]*CACHE)\b", src)
-    assert len(refs) >= 8, "probe section shrank — update this test"
-    for alias, attr in refs:
-        cache = getattr(mods[alias], attr, None)
-        assert isinstance(cache, dict), (
-            f"bench.py references {alias}.{attr} but "
-            f"{mods[alias].__name__} no longer exposes it as a dict"
+
+def _session_memo_caches() -> dict[str, dict]:
+    """``module._NAME`` -> cache for every first argument of a
+    ``session_memo(`` call in the package, each checked to be a
+    module-level dict."""
+    caches = {}
+    for path in PACKAGE.rglob("*.py"):
+        mod_name = ".".join(
+            path.relative_to(BENCH.parent).with_suffix("").parts
+        )
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and getattr(node.func, "id", None) == "session_memo"):
+                continue
+            arg = node.args[0]
+            assert isinstance(arg, ast.Name), (
+                f"{mod_name}: session_memo's cache is not a plain name"
+            )
+            cache = getattr(importlib.import_module(mod_name), arg.id,
+                            None)
+            assert isinstance(cache, dict), (
+                f"{mod_name}.{arg.id} is not a module-level dict"
+            )
+            caches[f"{mod_name.rpartition('.')[2]}.{arg.id}"] = cache
+    return caches
+
+
+def test_memo_scan_reports_every_session_memo_cache(tmp_path):
+    """Every cache handed to memo.session_memo is found by the bench's
+    scan once it holds the session key, and nothing else is."""
+    import bench
+    from biometric_stream_processing_spark.memo import session_memo
+
+    caches = _session_memo_caches()
+    assert len(caches) >= 11, sorted(caches)
+
+    class _Session:
+        class sparkContext:
+            applicationId = "app-memo-scan-test"
+
+    key = (_Session.sparkContext.applicationId,
+           os.path.realpath(tmp_path))
+    assert bench._keyed_memos(key) == set()
+    try:
+        for cache in caches.values():
+            session_memo(cache, _Session, str(tmp_path), lambda: "built")
+        assert bench._keyed_memos(key) == set(caches)
+    finally:
+        for cache in caches.values():
+            cache.pop(key, None)
+
+
+@pytest.fixture
+def fresh_sf(tmp_path):
+    """A private copy of the sf0.001 tables: its realpath is a memo key
+    nothing else in the session has built under."""
+    sf = os.path.realpath(shutil.copytree(SF_DIR, tmp_path / "sf0.001"))
+    yield sf
+    for val in _package_dicts():
+        for k in [k for k in val if isinstance(k, tuple) and sf in k]:
+            del val[k]
+
+
+def test_persist_list_prekeys_only_its_lazy_plan_memos(spark, fresh_sf):
+    """Building the bench's persist list keys exactly the clean-corpus
+    and LSH-verify plan memos, and nothing reads as built before the
+    timed loop: no ``__prebuilt__`` owner."""
+    import bench
+
+    memos = bench._MemoLedger(spark, fresh_sf)
+    try:
+        assert memos.prekeyed == {
+            "documents_ops._CLEAN_CORPUS_CACHE",
+            "documents_ops._JACCARD_DUPS_CACHE",
+        }
+        assert memos.owners == {}
+        from biometric_stream_processing_spark.plans.documents_ops import (
+            shared_split_grams,
         )
 
-
-def test_bench_probe_covers_every_declared_memo():
-    """Every MEMO_OWNERS key must have an observation probe (and vice
-    versa) — an unobserved memo silently reverts billing to trust."""
-    import importlib.util
-    import sys
-
-    spec = importlib.util.spec_from_file_location("bench_mod", BENCH)
-    bench_mod = importlib.util.module_from_spec(spec)
-    sys.modules["bench_mod"] = bench_mod
-    try:
-        spec.loader.exec_module(bench_mod)
-        declared = set(bench_mod.MEMO_OWNERS)
+        shared_split_grams(spark, fresh_sf)
+        memos.bill("first_entry")
+        memos.bill("second_entry")
+        assert memos.owners == {
+            "documents_ops._SPLIT_GRAMS_CACHE": "first_entry"
+        }
     finally:
-        sys.modules.pop("bench_mod", None)
-    src = BENCH.read_text()
-    probe_block = src.split("memo_probes = {", 1)[1].split("}", 1)[0]
-    probed = set(re.findall(r'"([a-z_]+)":', probe_block))
-    assert probed == declared, (
-        f"probe/declared drift: only-probed={probed - declared}, "
-        f"only-declared={declared - probed}"
+        for df in memos.frames.values():
+            df.unpersist()
+
+
+def test_memo_built_before_the_loop_reads_prebuilt(spark, fresh_sf):
+    """A memo keyed before the persist list, i.e. off the clock, is
+    billed to ``__prebuilt__``, not to the timed entry that would
+    otherwise read it first."""
+    import bench
+    from biometric_stream_processing_spark.plans.documents_ops import (
+        shared_split_grams,
     )
+
+    shared_split_grams(spark, fresh_sf)
+    memos = bench._MemoLedger(spark, fresh_sf)
+    try:
+        memos.bill("first_entry")
+        assert memos.owners == {
+            "documents_ops._SPLIT_GRAMS_CACHE": "__prebuilt__"
+        }
+    finally:
+        for df in memos.frames.values():
+            df.unpersist()
 
 
 def test_gc_probe_returns_live_counter(spark):

@@ -18,6 +18,7 @@ in ``__spark_entry__.queries``):
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -275,7 +276,28 @@ def test_expiring_debt_is_front_loaded():
     )
 
 
+@functools.cache
+def _is_git_checkout(root: str) -> bool:
+    try:
+        top = subprocess.run(
+            ["git", "rev-parse", "--show-toplevel"], cwd=root,
+            capture_output=True, text=True,
+        )
+    except OSError:
+        return False
+    return top.returncode == 0 and (
+        os.path.realpath(top.stdout.strip()) == os.path.realpath(root)
+    )
+
+
 def _git(*args: str) -> str:
+    """Run git in ROOT. The checks that read the registration's
+    history skip, instead of failing, in a tree that is not a git
+    checkout of its own (a ``git archive`` export): there is no
+    history to judge against."""
+    if not _is_git_checkout(ROOT):
+        pytest.skip("no git history: the tree is not a git checkout "
+                    "(e.g. a git archive export)")
     return subprocess.run(
         ["git", *args], cwd=ROOT, capture_output=True, text=True, check=True
     ).stdout
@@ -602,3 +624,28 @@ def test_round_plan_tool_agrees_with_the_rotation_helpers():
             continue  # never-verified sort last; skip mixed pairs
         assert (ga, list(rounds[ga]).index(a)) <= \
                (gb, list(rounds[gb]).index(b)), (a, b)
+
+
+def test_history_checks_skip_outside_a_git_checkout(monkeypatch, tmp_path):
+    """A tree that is not a git checkout of its own (a ``git archive``
+    export, even one unpacked inside another repository) has no
+    registration history: the checks that read it must skip with
+    that reason instead of raising CalledProcessError."""
+    import tests.test_gate_rotation as mod
+
+    subprocess.run(["git", "init", "-q", str(tmp_path)], check=True)
+    (tmp_path / "export").mkdir()
+    assert mod._is_git_checkout(str(tmp_path))
+    assert not mod._is_git_checkout(str(tmp_path / "export"))
+
+    monkeypatch.setattr(mod, "_is_git_checkout", lambda root: False)
+    for test in (
+        mod.test_expiring_debt_is_front_loaded,
+        mod.test_changed_helpers_reenter_the_gate_window,
+        mod.test_changed_queries_reenter_the_gate_window,
+        mod.test_round_plan_tool_agrees_with_the_rotation_helpers,
+        lambda: mod.test_guard_handles_untracked_newest_artifact(
+            monkeypatch),
+    ):
+        with pytest.raises(pytest.skip.Exception, match="no git history"):
+            test()

@@ -136,7 +136,24 @@ def test_pagerank_deterministic_under_repartition(spark):
     assert r1 == r2                      # exact-decimal sums: bit-equal
 
 
-# --------------------------------------------------------------- BFS
+def test_pagerank_checkpoints_its_edge_list_eagerly(spark):
+    """The symmetrized edge list is shared by the concurrent jobs of one
+    AQE query. Checkpointed lazily, the first job to finish clears its
+    lineage while another job's submission walks it (a DAGScheduler
+    NullPointerException), so the plan pagerank returns must read an
+    RDD that is checkpointed before any action runs."""
+    from biometric_stream_processing_spark.operators.dedup import (
+        pagerank,
+    )
+
+    ranks = pagerank(_edges(spark, [(1, 2), (2, 3)]), iters=1)
+    leaves = ranks._jdf.queryExecution().analyzed().collectLeaves()
+    rdd_leaves = [
+        leaves.apply(i) for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    ]
+    assert rdd_leaves
+    assert all(leaf.rdd().isCheckpointed() for leaf in rdd_leaves)
 
 def test_bfs_chain_distances(spark):
     from biometric_stream_processing_spark.operators.dedup import (

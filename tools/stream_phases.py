@@ -1,12 +1,10 @@
-"""Per-phase decomposition of streaming entries — the round-17
-StreamingQueryProgress probe, promoted from a session monkeypatch to a
-committed tool (round-17 verdict item 6).
+"""Per-phase decomposition of streaming entries.
 
 For each named streaming entry (default: every ``streaming_*`` in the
-registry) this wraps the harness drivers
-(``pipeline.run_stream_to_memory`` / ``sinks.start_with_foreach_batch``)
-to capture every micro-batch's ``StreamingQueryProgress.durationMs``
-and prints, per entry:
+registry) this collects every micro-batch's
+``StreamingQueryProgress.durationMs`` through a
+``StreamingQueryListener`` registered for the run, and prints, per
+entry:
 
   wall      total entry seconds (same clock as bench.py: the entry
             call + a count() on the returned frame)
@@ -31,10 +29,69 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO_ROOT)
+
+#: seconds to wait for a stopped query's termination event
+TERMINATION_WAIT_S = 60.0
+
+
+class _ProgressLog(StreamingQueryListener):
+    """Progress of the queries started since the last ``take()``.
+
+    ``onQueryStarted`` runs synchronously inside ``start()``; progress
+    and termination events arrive later on the listener bus, in the
+    order they were posted, so a query's progress is complete once its
+    termination event is in."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._started: list = []
+        self._terminated: set = set()
+        self._progress: dict = {}
+
+    def onQueryStarted(self, event) -> None:
+        with self._cond:
+            self._started.append(event.id)
+
+    def onQueryProgress(self, event) -> None:
+        with self._cond:
+            self._progress.setdefault(event.progress.id, []).append(
+                event.progress
+            )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        with self._cond:
+            self._terminated.add(event.id)
+            self._cond.notify_all()
+
+    def take(self, timeout: float) -> "list[tuple[int, int]] | None":
+        """(triggerExecution, addBatch) millis per micro-batch of the
+        queries started since the last call, in start then batch
+        order; None when one of them did not report its termination
+        within ``timeout`` seconds. Resets the log either way."""
+        with self._cond:
+            done = self._cond.wait_for(
+                lambda: self._terminated.issuperset(self._started),
+                timeout,
+            )
+            byb = {}
+            for i, qid in enumerate(self._started):
+                for p in self._progress.get(qid, []):
+                    d = p.durationMs or {}
+                    byb[(i, p.batchId)] = (
+                        d.get("triggerExecution", 0), d.get("addBatch", 0)
+                    )
+            self._started, self._terminated, self._progress = [], set(), {}
+        return [byb[k] for k in sorted(byb)] if done else None
 
 
 def main() -> int:
@@ -43,10 +100,6 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from bench import BENCH_CONFS
     from biometric_stream_processing_spark.session import get_spark
-    from biometric_stream_processing_spark.streaming import (
-        pipeline as P,
-        sinks as S,
-    )
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_sf = "/root/testdata/sf0.001"
@@ -55,45 +108,8 @@ def main() -> int:
     if not names:
         names = [n for n in qs if n.startswith("streaming_")]
 
-    progresses: list = []
-
-    def _drain(q) -> None:
-        q.processAllAvailable()
-        progresses.extend(
-            p for p in (q.recentProgress or []) if p is not None
-        )
-        q.stop()
-
-    real_mem, real_fb = P.run_stream_to_memory, S.start_with_foreach_batch
-
-    def probe_mem(df, name, ckpt, output_mode="append"):
-        q = (
-            df.writeStream.outputMode(output_mode).format("memory")
-            .queryName(name).option("checkpointLocation", ckpt).start()
-        )
-        _drain(q)
-        return df.sparkSession.table(name)
-
-    def probe_fb(df, writer, ckpt, output_mode="append"):
-        q = (
-            df.writeStream.outputMode(output_mode).foreachBatch(writer)
-            .option("checkpointLocation", ckpt).start()
-        )
-        # drain + capture but do NOT stop: the caller owns the
-        # processAllAvailable()/stop() lifecycle (both are cheap
-        # no-ops once everything has been processed here)
-        q.processAllAvailable()
-        progresses.extend(
-            p for p in (q.recentProgress or []) if p is not None
-        )
-        return q
-
-    P.run_stream_to_memory = probe_mem
-    S.start_with_foreach_batch = probe_fb
-    # entries import these names at module top only via attribute
-    # access inside function bodies EXCEPT the sink imports inside
-    # streaming_user_gapfill / streaming_dedup_merge, which bind at
-    # call time from the sinks module — patched above.
+    log = _ProgressLog()
+    spark.streams.addListener(log)
     try:
         if os.path.isdir(warm_sf):
             try:
@@ -106,7 +122,7 @@ def main() -> int:
         print(hdr)
         print("-" * len(hdr))
         for name in names:
-            progresses.clear()
+            log.take(0)
             t0 = time.time()
             try:
                 qs[name](spark, sf_dir).count()
@@ -114,26 +130,22 @@ def main() -> int:
                 print(f"{name:<36} <failed: {e!r}>")
                 continue
             wall = time.time() - t0
-            byb: dict[int, dict] = {}
-            for p in progresses:
-                d = p.durationMs or {}
-                byb[p.batchId] = {
-                    "trig": d.get("triggerExecution", 0),
-                    "add": d.get("addBatch", 0),
-                }
-            bids = sorted(byb)
-            trig_total = sum(b["trig"] for b in byb.values())
-            b0 = byb.get(bids[0]) if bids else {"trig": 0, "add": 0}
-            bn = byb.get(bids[-1]) if bids else {"trig": 0, "add": 0}
+            batches = log.take(TERMINATION_WAIT_S)
+            if batches is None:
+                print(f"{name:<36} <a query reported no termination "
+                      f"within {TERMINATION_WAIT_S:.0f} s>")
+                continue
+            b0 = batches[0] if batches else (0, 0)
+            bn = batches[-1] if batches else (0, 0)
+            trig_total = sum(trig for trig, _ in batches)
             print(
-                f"{name:<36} {wall:>6.2f} {len(bids):>7} "
-                f"{b0['trig']:>7}/{b0['add']:<7} "
-                f"{bn['trig']:>7}/{bn['add']:<7} "
+                f"{name:<36} {wall:>6.2f} {len(batches):>7} "
+                f"{b0[0]:>7}/{b0[1]:<7} "
+                f"{bn[0]:>7}/{bn[1]:<7} "
                 f"{wall - trig_total / 1000.0:>8.2f}"
             )
     finally:
-        P.run_stream_to_memory = real_mem
-        S.start_with_foreach_batch = real_fb
+        spark.streams.removeListener(log)
     return 0
 
 

@@ -73,8 +73,8 @@ PIN_MARKERS = ("FLOOR PIN", "PIN RE-CHECK", "ADJUDICATION",
                "inside the bar")
 
 #: entries whose recorded pin lives in a HELPER's docstring the
-#: source-proximity heuristic cannot see (annotated explicitly, the
-#: MEMO_OWNERS precedent — update when a pin moves):
+#: source-proximity heuristic cannot see (annotated explicitly —
+#: update when a pin moves):
 #:   embedding_similar_pairs / embedding_srp_pairs — FLOOR PINS
 #:     paragraph in operators/similarity.similar_pairs_blocked
 #:     (round 12; srp re-pinned round 14);
