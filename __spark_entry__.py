@@ -130,13 +130,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # The driver's correctness gate records only the first ~50 entries
     # in dict order, so registration order decides which queries get a
     # driver verdict. Rotation policy (CI-enforced by
-    # tests/test_gate_rotation.py): with N registered+queued entries
+    # tests/test_gate_rotation.py): with N registered entries
     # and a GATE_CAP≈50 verdict prefix, the minimal feasible
     # freshness window is K = ceil(N / 50) RECORDED rounds (the
     # window anchors on recorded rounds — the driver skipped
     # recording round 8 entirely, and a gap in the sequence costs
     # nothing); each round's prefix drains the oldest debt first,
-    # then first-verdicts for the queue, then source-changed
+    # then first-verdicts for new entries, then source-changed
     # re-verifications, then oldest-fresh fills. Registration order
     # is also bench order, so shared-subtree owners precede their
     # composites (the bench records each shared memo's first consumer
@@ -148,8 +148,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # front — derived via tools/round_plan.py against
     # CORRECTNESS_r{16,17,18}: 49 due (the 50-entry r16 block minus
     # embedding_kmeans_quality, which round 18 pre-verified as its
-    # spare), r17 block 50, r18 block 50, queue EMPTY — 49+50+50 =
-    # 149. ONE spare slot.
+    # spare), r17 block 50, r18 block 50 — 49+50+50 = 149. ONE
+    # spare slot.
     # SPARE (position 50): streaming_user_cadence — its state kernel
     # moved onto state.py's shared admission helpers, so its deep
     # fingerprint changed and it must re-enter the prefix; it is
@@ -257,23 +257,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ordered = front + [n for n in all_q if n not in front and n not in tail]
     ordered += [n for n in tail if n in all_q]
     return {n: all_q[n] for n in ordered}
-
-
-def queued_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """GATE QUEUE: implemented, oracled and unit-tested ops NOT yet
-    in ``queries()`` when the verdict prefix is full. EMPTY in
-    round 16 — the round's one spare slot went to
-    orders_constraint_report (forced through the gate by the
-    validate.py advice fix), and round 17 owes the full 50-entry r14
-    block with ZERO spares, so queueing net-new work now would make
-    the round-17 rotation infeasible (VERDICT_r15 next-steps #6:
-    rotation health outranks novelty at N=149). The cap here stays
-    ≤2 whenever the queue is non-empty.
-
-    ``tools/check_oracle.py --queued`` verifies entries here against
-    ``oracle_sql()`` exactly like registered ones, and
-    ``SPARK_GRAFT_BENCH_QUEUED=1`` appends them to the bench run."""
-    return {}
 
 
 def oracle_sql() -> dict[str, str]:

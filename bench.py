@@ -123,9 +123,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from biometric_stream_processing_spark.session import _ascii_digits  # noqa: E402
+
 BENCH_CONFS = {
+    # a junk override (not ASCII digits) falls back to 4 instead of
+    # failing conf parsing at session start
     "spark.sql.shuffle.partitions":
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"),
+        _ascii_digits(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"))
+        or "4",
     # NOTE: spark.sql.files.maxPartitionBytes stays at its 128 MB
     # default — a measured round-4 dead end. The sf0.1 single-file
     # tables scan as ONE task under the default, and a sequential
@@ -325,13 +330,6 @@ def main() -> None:
     spark = get_spark("bench", extra_confs=BENCH_CONFS)
     _warn_if_driver_mem_diverged(spark, BENCH_CONFS)
     qs = entrymod.queries()
-    # SPARK_GRAFT_BENCH_QUEUED=1 appends the round-6 gate queue
-    # (queued_queries) — the one-flip integration path when the queue
-    # registers; queued entries run AFTER the registered set so
-    # first-consumer billing of shared subtrees stays comparable
-    # round-over-round.
-    if os.environ.get("SPARK_GRAFT_BENCH_QUEUED") == "1":
-        qs = {**qs, **entrymod.queued_queries()}
 
     # Warm the JVM + parquet footer caches with the flagship, and the
     # Python daemon/worker pool + Arrow lanes with the mapInPandas

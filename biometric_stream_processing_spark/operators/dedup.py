@@ -630,12 +630,14 @@ def triangle_stats(edges: DataFrame,
     semi join) plus one degree aggregation — no cartesian anywhere.
 
     Output: 1 row (n_nodes, n_edges, n_wedges, n_triangles,
-    clustering_coeff)."""
+    clustering_coeff). The edge list is checkpointed EAGERLY because
+    the concurrent jobs of the one AQE query share it (see
+    ``pagerank``)."""
     e = (
         edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
         .where(F.col("a") < F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)   # reused 4× below
+        .localCheckpoint()   # reused 4× below
     )
     deg = (
         e.select(F.col("a").alias("node"))
@@ -773,7 +775,11 @@ def bfs_levels(
     holds only the loop control (frontier count); the same
     iterate-to-fixpoint shape as ``connected_components`` with the
     same lazy localCheckpoint per level. Deterministic: the (node,
-    dist) relation of BFS is unique regardless of execution order."""
+    dist) relation of BFS is unique regardless of execution order.
+
+    The symmetrized edge list and the sources are checkpointed
+    EAGERLY: the concurrent jobs of one level's AQE query share them,
+    which a lazy checkpoint cannot survive (see ``pagerank``)."""
     sym = (
         edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(
@@ -781,11 +787,11 @@ def bfs_levels(
                          F.col(a_col).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     visited = sources.select(
         F.col(src_col).alias("node"), F.lit(0).alias("dist")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     frontier = visited
     for d in range(1, max_depth + 1):
         nxt = (

@@ -132,6 +132,14 @@ if _mem:
     DEFAULT_CONFS["spark.driver.memory"] = _mem
 
 
+def _default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]`` when that is ASCII digits, else
+    ``local[*]`` (all cores): a junk value such as '٤' or '4 ' would
+    otherwise fail session start with "Could not parse Master URL"."""
+    cpus = _ascii_digits(os.environ.get("SPARK_GRAFT_CPUS")) or "*"
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "biometric_stream_processing_spark",
     master: str | None = None,
@@ -139,12 +147,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, falling
-    back to all cores) so bench and tests share one code path.
+    ``master`` defaults to ``_default_master()`` so bench and tests
+    share one code path.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+        master = _default_master()
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _session_confs(master, extra_confs).items():
         builder = builder.config(k, v)

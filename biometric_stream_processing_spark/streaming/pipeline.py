@@ -380,6 +380,53 @@ def _staged_events_dir_with_sentinel(sf_dir: str, ts_unit: str) -> str:
     return staged
 
 
+#: State partitions of the entries whose operator is a Python keyed
+#: state machine. They invert the windowed-aggregate tuning: the
+#: per-key Arrow/state round-trips parallelize across Python workers,
+#: so more partitions win until the state-commit cost bites (measured
+#: at sf0.1: 2→6.3 s, 4→4.6 s, 8→3.9 s, 16→3.9 s, 32→5.5 s). 8 is the
+#: knee; the declarative entries keep 4.
+PYTHON_STATE_PARTITIONS = 8
+
+
+def _drain_events(
+    spark: SparkSession, sf_dir: str, build, *,
+    state_partitions: int = 4, sentinel: bool = False,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Stream ``sf_dir``'s events table through ``build`` (a function
+    from the events stream to the streaming result) into a memory sink
+    and return the sink's table.
+
+    The whole run, ``build`` included, has
+    ``spark.sql.shuffle.partitions`` pinned to ``state_partitions``
+    (restored afterwards, also on error). With ``sentinel`` the source
+    also holds the watermark-flush sentinel
+    (``_staged_events_dir_with_sentinel``) and the sentinel user's
+    rows are filtered from the result."""
+    import os
+    import uuid
+
+    with pinned_shuffle_partitions(spark, state_partitions):
+        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
+        if sentinel:
+            src = _events_stream_source(
+                spark, _staged_events_dir_with_sentinel(sf_dir, ts_unit),
+                "*.parquet", ts_unit,
+            )
+        else:
+            src = _events_stream_source(
+                spark, sf_dir, "events.parquet", ts_unit
+            )
+        out = run_stream_to_memory(
+            build(src), "events_stream_" + uuid.uuid4().hex[:8],
+            scratch_dir("bspe_ckpt_"), output_mode=output_mode,
+        )
+    if sentinel:
+        out = out.where(F.col("user_id") != SENTINEL_USER_ID)
+    return out
+
+
 def biometric_alerts_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship pipeline run through Structured Streaming over the
     driver's events table. A watermark-flush sentinel (one synthetic
@@ -746,26 +793,11 @@ def streaming_enriched_segment_counts(
     The exact-decimal sum keeps the double aggregate
     order-independent (``plans/events_ops.dsum``).
 
-    HINT RETIREMENT LANDED (round 13, staged round 12 as
-    ``_streaming_enriched_unhinted``): the dimension join no longer
-    forces ``F.broadcast`` — customer is SF-GROWING (billions of
-    rows at 100 TB: an executor OOM under a forced hint), and the
-    docstring's threshold-based-planning claim above is now what the
-    code actually does. The per-microbatch planner still broadcasts
-    the 2-column dim from its parquet stats at bench scale and flips
-    to a shuffled join when it can't — both pinned in
-    ``tests/test_round12_enrichment_twin.py``, which also keeps the
-    retired hinted form rebuilt inline for a permanent value-identity
-    check (the hint moves join strategy only)."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..plans.events_ops import dsum
     from ..sources.readers import load_table
 
-    with pinned_shuffle_partitions(spark):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(spark, sf_dir, "events.parquet", ts_unit)
+    def build(src: DataFrame) -> DataFrame:
         dim = load_table(spark, sf_dir, "customer").select(
             "c_custkey", F.col("c_mktsegment").alias("segment")
         )
@@ -776,16 +808,12 @@ def streaming_enriched_segment_counts(
         # streaming frames (it needs per-group member state; Spark
         # offers approx_count_distinct instead, which has no exact
         # oracle)
-        agg = enriched.groupBy("segment", "event_type").agg(
+        return enriched.groupBy("segment", "event_type").agg(
             F.count("*").alias("n_events"),
             dsum(F.col("value"), "sum_value"),
         )
-        name = "enrich_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(
-            agg, name, scratch_dir("bspe_enr_"),
-            output_mode="complete",
-        )
-    return out
+
+    return _drain_events(spark, sf_dir, build, output_mode="complete")
 
 
 def streaming_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,26 +917,20 @@ def streaming_approx_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ across engines): the STREAMED estimate is compared against
     the exact batch distinct per (window, type) and the oracled value
     is the tolerance check (3σ of the 5% default rsd + small-group
-    slack). Registered round 6 (from the round-5 gate queue)."""
-    import os
-    import uuid
+    slack).
 
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..operators.windows import tumbling_window_start
     from ..sources.readers import load_table
 
-    with pinned_shuffle_partitions(spark):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        agg = (
+    out = _drain_events(
+        spark, sf_dir,
+        lambda src: (
             src.groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.approx_count_distinct("user_id").alias("_approx"))
-        )
-        name = "axu_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(
-            agg, name, scratch_dir("bspe_axu_"), output_mode="complete"
-        )
+        ),
+        output_mode="complete",
+    )
     streamed = out.select(
         F.unix_timestamp(F.col("window.start")).alias("wstart"),
         "event_type", "_approx",
@@ -1134,25 +1156,15 @@ def streaming_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-batch running-state cadence and the late-drop contract are
     golden-tested in test_streaming_zscore.py.
 
-    NOTE (gate registration): registered round 6 — implemented and
-    oracled in round 5; the round-5 verdict-bearing prefix is full,
-    so this registers in round 6's front block."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..plans.timeseries_ops import ZSCORE_MIN_PRIOR, ZSCORE_THRESHOLD
     from .state import zscore_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        out = zscore_stream(src, ZSCORE_MIN_PRIOR, ZSCORE_THRESHOLD)
-        name = "zsc_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_zsc_"))
-    return out
+    return _drain_events(
+        spark, sf_dir,
+        lambda src: zscore_stream(src, ZSCORE_MIN_PRIOR, ZSCORE_THRESHOLD),
+        state_partitions=PYTHON_STATE_PARTITIONS,
+    )
 
 
 def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,28 +1179,16 @@ def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     order equal the batch total order, so the emission equals the
     batch relation exactly; cross-batch smoothing continuation and
     the late-drop contract are golden-tested in
-    test_streaming_ewma.py. ROUND-9 QUEUE (registers round 10).
+    test_streaming_ewma.py.
 
-    Wall (sf0.1, local[32]): 5.1 s cold-session first run in
-    QUEUED_BENCH_r09 (staged-source + checkpoint setup — the twin
-    floor, cf. streaming_attribution), ~2.2× the oracle's recursive
-    CTE; warm in-bench runs land ~2 s like the other twins."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..plans.timeseries_ops import EWMA_ALPHA
     from .state import ewma_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        out = ewma_stream(src, EWMA_ALPHA)
-        name = "ewma_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_ewma_"))
-    return out
+    return _drain_events(
+        spark, sf_dir, lambda src: ewma_stream(src, EWMA_ALPHA),
+        state_partitions=PYTHON_STATE_PARTITIONS,
+    )
 
 
 def streaming_user_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,29 +1209,16 @@ def streaming_user_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile exactly; cross-batch moment continuation and the
     same-second tie guard are property-tested in
     tests/test_round10_properties.py and golden-tested in
-    test_streaming_cadence.py. ROUND-10 QUEUE (registers round 11).
+    test_streaming_cadence.py.
 
-    Wall (sf0.1, local[32]): QUEUED_BENCH_r10's recorded 15.9 s is
-    the cold-session first run (staged-source + checkpoint setup —
-    the twin floor, cf. streaming_attribution's 15.4 s); warm
-    same-session best-of-3 is 3.1 s, in line with the other
-    Python-stateful twins on this host generation
-    (streaming_abandoned_clicks 4.0 s isolated this round)."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..plans.events_ops import cadence_finish
     from .state import cadence_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        out = cadence_stream(src)
-        name = "cadence_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_cad_"))
+    out = _drain_events(
+        spark, sf_dir, cadence_stream,
+        state_partitions=PYTHON_STATE_PARTITIONS,
+    )
     latest = out.groupBy("user_id").agg(
         F.max(F.struct("n_gaps", "s2_hi", "s2_lo", "s")).alias("_m")
     )
@@ -1343,23 +1330,13 @@ def streaming_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     get data). Cross-batch run continuation and the flush cadence are
     golden-tested in test_streaming_scd2.py.
 
-    Registered round 6 (drained from the round-5 gate queue)."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from .state import scd2_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, _staged_events_dir_with_sentinel(sf_dir, ts_unit),
-            "*.parquet", ts_unit,
-        )
-        out = scd2_stream(src)
-        name = "scd_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_scd_"))
-    return out.where(F.col("user_id") != SENTINEL_USER_ID)
+    return _drain_events(
+        spark, sf_dir, scd2_stream,
+        state_partitions=PYTHON_STATE_PARTITIONS, sentinel=True,
+    )
 
 
 def dedup_registry_merge(
@@ -1470,16 +1447,9 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink — Structured Streaming forbids an aggregation AFTER a Python
     stateful operator in append mode (the module-head note), and at
     deployment scale that rollup is the downstream reader's windowed
-    aggregate, not this operator's job. ROUND-8 QUEUE (registers
-    round 9).
+    aggregate, not this operator's job.
 
-    Wall (sf0.1, local[32]): QUEUED_BENCH_r08's 15.4 s first run is
-    cold-session staged-source + checkpoint setup; warm same-session
-    runs measure 2.7-2.8 s (best-of-3), in line with the other
-    Python-stateful twins (streaming_abandoned_clicks 3.1 s)."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from ..plans.events_ops import (
         ATTR_TOUCH_TYPES,
         ATTR_WINDOW_S,
@@ -1487,17 +1457,13 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .state import attribution_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        out = attribution_stream(
+    out = _drain_events(
+        spark, sf_dir,
+        lambda src: attribution_stream(
             src, ATTR_TOUCH_TYPES, "purchase", ATTR_WINDOW_S
-        )
-        name = "attr_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_attr_"))
+        ),
+        state_partitions=PYTHON_STATE_PARTITIONS,
+    )
     return out.groupBy("channel").agg(
         F.count("*").alias("n_conversions"),
         dsum(F.col("value"), "sum_value"),
@@ -1521,27 +1487,18 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Markov-matrix rollup (counts + row-normalized p_next over the
     tiny |types|² relation) runs batch-side over the memory sink for
     the same stateful-then-aggregate reason as
-    ``streaming_attribution``. ROUND-8 QUEUE (registers round 9).
+    ``streaming_attribution``.
 
-    Wall (sf0.1, local[32]): 4.4 s first run in QUEUED_BENCH_r08,
-    2.7 s warm (best-of-3) — the staged-source twin floor."""
-    import os
-    import uuid
-
+    Measurement and registration history: ``OPTIMIZATION_r19.md``."""
     from pyspark.sql import Window as W
 
     from ..plans.events_ops import TRANSITION_GAP_S
     from .state import transition_stream
 
-    # Python-stateful: 8 partitions, see streaming_abandoned_clicks
-    with pinned_shuffle_partitions(spark, 8):
-        ts_unit = _events_ts_unit(os.path.join(sf_dir, "events.parquet"))
-        src = _events_stream_source(
-            spark, sf_dir, "events.parquet", ts_unit
-        )
-        out = transition_stream(src, TRANSITION_GAP_S)
-        name = "trans_stream_" + uuid.uuid4().hex[:8]
-        out = run_stream_to_memory(out, name, scratch_dir("bspe_trn_"))
+    out = _drain_events(
+        spark, sf_dir, lambda src: transition_stream(src, TRANSITION_GAP_S),
+        state_partitions=PYTHON_STATE_PARTITIONS,
+    )
     counts = out.groupBy("prev_type", "event_type").agg(
         F.count("*").alias("n_transitions")
     )

@@ -100,16 +100,20 @@ def _admitted_rows(
 
 
 def _keyed_state_stream(
-    events: DataFrame, watermark_delay: str, cols: Sequence[Any], fn,
+    events: DataFrame, cols: Sequence[Any], fn,
     output_schema: str, state_schema: str, timeout: str,
 ) -> DataFrame:
     """Run ``fn`` as an append-mode ``applyInPandasWithState`` keyed by
     ``user_id`` over the watermarked ``user_id, ts, event_id, tus,
     *cols`` projection. ``ts`` stays in the projection because an
-    event-time timeout needs the watermarked column as input."""
+    event-time timeout needs the watermarked column as input.
+
+    The watermark delay is fixed at 0: the machines are exact only if
+    every row older than the newest event time of an earlier batch is
+    dropped as late, so no caller may widen it."""
     from pyspark.sql import functions as F
 
-    keyed = events.withWatermark("ts", watermark_delay).select(
+    keyed = events.withWatermark("ts", "0 seconds").select(
         "user_id", "ts", "event_id",
         F.unix_micros(F.col("ts")).alias("tus"), *cols,
     )
@@ -597,7 +601,6 @@ def zscore_stream(
     events: DataFrame,
     min_prior: int,
     threshold: float,
-    watermark_delay: str = "0 seconds",
 ) -> DataFrame:
     """Streaming per-user z-score anomaly flags — the streaming twin
     of ``plans/timeseries_ops.running_zscore_flags``, whose DuckDB
@@ -606,7 +609,7 @@ def zscore_stream(
     from pyspark.sql import functions as F
 
     scored = _keyed_state_stream(
-        events, watermark_delay,
+        events,
         [F.round(F.col("value") * 100).cast("long").alias("cents")],
         zscore_fn(min_prior), ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
@@ -667,11 +670,7 @@ def ewma_fn(alpha: float):
     return fn
 
 
-def ewma_stream(
-    events: DataFrame,
-    alpha: float,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
+def ewma_stream(events: DataFrame, alpha: float) -> DataFrame:
     """Streaming per-user EWMA — the streaming twin of
     ``plans/timeseries_ops.user_value_ewma``, whose DuckDB oracle it
     shares. O(1) state (one smoothed double), emission 1-to-1 with
@@ -679,7 +678,7 @@ def ewma_stream(
     from pyspark.sql import functions as F
 
     smoothed = _keyed_state_stream(
-        events, watermark_delay,
+        events,
         [F.round(F.col("value") * 100).cast("long").alias("cents")],
         ewma_fn(alpha), EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
@@ -773,10 +772,7 @@ def scd2_fn():
     return fn
 
 
-def scd2_stream(
-    events: DataFrame,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
+def scd2_stream(events: DataFrame) -> DataFrame:
     """Streaming SCD-2 state history — the streaming twin of
     ``plans/timeseries_ops.user_state_history``, whose DuckDB oracle
     it shares. Closed runs emit on state change; open runs emit on
@@ -784,7 +780,7 @@ def scd2_stream(
     input filter (it carries the flushing watermark), so no pre-op
     event-type filter is applied here."""
     return _keyed_state_stream(
-        events, watermark_delay, ["event_type"], scd2_fn(),
+        events, ["event_type"], scd2_fn(),
         SCD2_OUTPUT_SCHEMA, SCD2_STATE_SCHEMA,
         GroupStateTimeout.EventTimeTimeout,
     )
@@ -869,13 +865,12 @@ def attribution_stream(
     touch_types: tuple[str, ...],
     conversion_type: str,
     window_s: int,
-    watermark_delay: str = "0 seconds",
 ) -> DataFrame:
     """Streaming last-touch attribution — per-conversion (channel,
     value) rows; the per-channel rollup happens downstream (see
     ``pipeline.streaming_attribution``)."""
     return _keyed_state_stream(
-        events, watermark_delay, ["event_type", "value"],
+        events, ["event_type", "value"],
         attribution_fn(touch_types, conversion_type, window_s),
         ATTRIB_OUTPUT_SCHEMA, ATTRIB_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
@@ -1035,16 +1030,13 @@ def cadence_fn():
     return fn
 
 
-def cadence_stream(
-    events: DataFrame,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
+def cadence_stream(events: DataFrame) -> DataFrame:
     """Streaming per-user cadence moments — the keyed-state stage of
     the ``streaming_user_cadence`` twin; one snapshot row per
     (user, batch-with-data), finished engine-side by the shared
     ``cadence_finish`` dag."""
     return _keyed_state_stream(
-        events, watermark_delay, [], cadence_fn(),
+        events, [], cadence_fn(),
         CADENCE_OUTPUT_SCHEMA, CADENCE_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )
@@ -1196,16 +1188,12 @@ def gapfill_stream(
     )
 
 
-def transition_stream(
-    events: DataFrame,
-    gap_s: int,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
+def transition_stream(events: DataFrame, gap_s: int) -> DataFrame:
     """Streaming journey-step emission — one row per in-gap
     transition; the Markov-matrix rollup happens downstream (see
     ``pipeline.streaming_transitions``)."""
     return _keyed_state_stream(
-        events, watermark_delay, ["event_type"], transition_fn(gap_s),
+        events, ["event_type"], transition_fn(gap_s),
         TRANSITION_OUTPUT_SCHEMA, TRANSITION_STATE_SCHEMA,
         GroupStateTimeout.NoTimeout,
     )

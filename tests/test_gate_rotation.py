@@ -85,20 +85,10 @@ def _k_window(names_total: int) -> int:
     (The pre-round-6 form used K-1, which is arithmetically
     infeasible once N > (K-1)·GATE_CAP — the round-5 verdict's
     finding #1: the test went red between rounds by design error,
-    not by debt.) N counts queued entries too: they are committed
-    obligations that will occupy prefix slots."""
+    not by debt.)"""
     import math
 
     return max(2, math.ceil(names_total / GATE_CAP))
-
-
-def _n_total() -> int:
-    import sys
-
-    sys.path.insert(0, ROOT)
-    import __spark_entry__ as entrymod
-
-    return len(entrymod.queries()) + len(entrymod.queued_queries())
 
 
 def _last_green(rounds: dict[int, dict], name: str) -> int | None:
@@ -118,7 +108,7 @@ def test_rotation_freshness():
     rounds = _rounds()
     if not rounds:
         pytest.skip("no recorded rounds")
-    k = _k_window(_n_total())
+    k = _k_window(len(names))
     recent = sorted(rounds)[-k:]
     fresh = set().union(*(_green_in(rounds, r) for r in recent))
     ever = set().union(*(_green_in(rounds, r) for r in rounds))
@@ -164,7 +154,7 @@ def test_rotation_debt_is_payable():
     rounds = _rounds()
     if not rounds:
         pytest.skip("no recorded rounds")
-    k = _k_window(_n_total())
+    k = _k_window(len(names))
     prefix = set(names[:GATE_CAP])
     due = _due_after_next(
         rounds, [n for n in names if n not in prefix], k
@@ -267,7 +257,7 @@ def test_expiring_debt_is_front_loaded():
         pytest.skip("registration predates the newest driver artifact "
                     "(between-rounds state); debt payability is "
                     "checked by test_rotation_debt_is_payable")
-    k = _k_window(_n_total())
+    k = _k_window(len(names))
     missed = _due_after_next(rounds, names[GATE_CAP:], k)
     assert missed == [], (
         f"entries that exceed the {k}-round window after the upcoming "
@@ -490,24 +480,6 @@ def test_changed_queries_reenter_the_gate_window():
     )
 
 
-def test_queue_registry_consistency():
-    """The round-6 queue must be registrable as-is: disjoint from the
-    registered set, every entry oracled (or an explicitly documented
-    rows-only case — currently none), and wrapped with the same
-    tune_session contract (the __wrapped__ attr gate_sources hashes)."""
-    import sys
-
-    sys.path.insert(0, ROOT)
-    import __spark_entry__ as entrymod
-
-    queued = entrymod.queued_queries()
-    registered = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    assert set(queued).isdisjoint(registered)
-    assert [n for n in queued if n not in oracles] == []
-    assert all(hasattr(fn, "__wrapped__") for fn in queued.values())
-
-
 def test_deep_fingerprint_ignores_registration_order():
     """Deep fingerprints must be ROTATION-INVARIANT (round-12 fix):
     ``_package_defs`` must not resolve names against
@@ -585,7 +557,7 @@ def test_round_plan_tool_agrees_with_the_rotation_helpers():
     rounds = _rounds()
     if not rounds:
         pytest.skip("no recorded rounds")
-    k = _k_window(_n_total())
+    k = _k_window(len(names))
     proj = dict(rounds)
     proj[max(rounds) + 1] = {
         n: {"hash_match": True} for n in names[:GATE_CAP]

@@ -136,6 +136,16 @@ def test_pagerank_deterministic_under_repartition(spark):
     assert r1 == r2                      # exact-decimal sums: bit-equal
 
 
+def _checkpoint_states(df):
+    """``isCheckpointed`` of every checkpointed RDD the plan of ``df``
+    reads, before any action runs on it."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [
+        leaves.apply(i).rdd().isCheckpointed() for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    ]
+
+
 def test_pagerank_checkpoints_its_edge_list_eagerly(spark):
     """The symmetrized edge list is shared by the concurrent jobs of one
     AQE query. Checkpointed lazily, the first job to finish clears its
@@ -146,14 +156,49 @@ def test_pagerank_checkpoints_its_edge_list_eagerly(spark):
         pagerank,
     )
 
-    ranks = pagerank(_edges(spark, [(1, 2), (2, 3)]), iters=1)
-    leaves = ranks._jdf.queryExecution().analyzed().collectLeaves()
-    rdd_leaves = [
-        leaves.apply(i) for i in range(leaves.size())
-        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
-    ]
-    assert rdd_leaves
-    assert all(leaf.rdd().isCheckpointed() for leaf in rdd_leaves)
+    states = _checkpoint_states(
+        pagerank(_edges(spark, [(1, 2), (2, 3)]), iters=1)
+    )
+    assert states and all(states)
+
+
+def test_triangle_stats_checkpoints_its_edge_list_eagerly(spark):
+    """Same race as pagerank's: the canonical edge list feeds the degree
+    count, the orientation joins and the closing-edge join of one AQE
+    query, so it must be checkpointed before any action runs."""
+    states = _checkpoint_states(
+        triangle_stats(_edges(spark, [(1, 2), (2, 3), (1, 3)]))
+    )
+    assert states and all(states)
+
+
+def test_bfs_checkpoints_its_shared_inputs_eagerly(spark, monkeypatch):
+    """The symmetrized edge list and the level-0 frame are read by the
+    concurrent jobs of every level's query, so each must already be
+    checkpointed when ``localCheckpoint`` returns it. The per-level
+    frames may stay lazy: the level's own count materializes them
+    before anything else reads them."""
+    from biometric_stream_processing_spark.operators.dedup import (
+        bfs_levels,
+    )
+
+    edges = _edges(spark, [(1, 2), (2, 3)])
+    frame_cls = type(edges)  # the session's concrete DataFrame class
+    states = []
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        states.append(_checkpoint_states(out))
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    bfs_levels(edges, spark.createDataFrame([(1,)], "node long"),
+               max_depth=1)
+    sym, visited = states[:2]
+    assert sym and all(sym)
+    assert visited and all(visited)
+
 
 def test_bfs_chain_distances(spark):
     from biometric_stream_processing_spark.operators.dedup import (

@@ -6,7 +6,7 @@ profiling, per-class embedding centroids, and passage-level dedup
 (the streaming OHLC twin's cross-batch golden lives in
 ``test_streaming_ohlc.py``). Hand-built frames with known answers;
 DuckDB hash parity is covered by the module ORACLE entries via
-``tools/check_oracle.py --queued``; hypothesis suites vs independent
+``tools/check_oracle.py``; hypothesis suites vs independent
 Python references live in ``test_round7_properties.py``."""
 
 from __future__ import annotations

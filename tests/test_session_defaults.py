@@ -18,6 +18,9 @@ session).
 5. Streaming checkpoints of ``get_spark`` sessions go through the
    FileSystem-based checkpoint file manager, and ``tune_session``
    leaves a host session's choice alone.
+6. The env values passed on to Spark verbatim elsewhere fail safe
+   too: ``get_spark``'s default master and ``bench.py``'s shuffle
+   partitions take only ASCII digits (re-imported like cases 1-4).
 """
 
 from __future__ import annotations
@@ -32,10 +35,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PROBE = """
 import json, os, sys
 sys.path.insert(0, {repo!r})
-from biometric_stream_processing_spark.session import DEFAULT_CONFS
+import bench
+from biometric_stream_processing_spark.session import (
+    DEFAULT_CONFS, _default_master,
+)
 print(json.dumps({{
     "shuffle": DEFAULT_CONFS["spark.sql.shuffle.partitions"],
     "gc": DEFAULT_CONFS.get("spark.driver.extraJavaOptions"),
+    "master": _default_master(),
+    "bench_shuffle": bench.BENCH_CONFS["spark.sql.shuffle.partitions"],
 }}))
 """
 
@@ -100,6 +108,28 @@ def test_shuffle_rejects_non_ascii_digit_cpus():
     assert _defaults(SPARK_GRAFT_CPUS="٤")["shuffle"] == str(
         _os.cpu_count() or 8
     )
+
+
+def test_default_master_rejects_junk_cpus():
+    """A SPARK_GRAFT_CPUS that is not ASCII digits would make
+    ``local[...]`` fail session start ("Could not parse Master URL");
+    the default master falls back to all cores instead."""
+    assert _defaults(SPARK_GRAFT_CPUS="4")["master"] == "local[4]"
+    for junk in ("٤", "4 ", "", "auto", "*"):
+        assert _defaults(SPARK_GRAFT_CPUS=junk)["master"] == "local[*]"
+    assert _defaults()["master"] == "local[*]"
+
+
+def test_bench_shuffle_override_rejects_junk():
+    """bench.py's SPARK_GRAFT_SHUFFLE_PARTITIONS override takes ASCII
+    digits only; anything else keeps the bench's pinned 4."""
+    assert _defaults(SPARK_GRAFT_SHUFFLE_PARTITIONS="7")["bench_shuffle"] \
+        == "7"
+    for junk in ("", "auto", "-3", "7.5", "٧", "4 "):
+        assert _defaults(
+            SPARK_GRAFT_SHUFFLE_PARTITIONS=junk
+        )["bench_shuffle"] == "4"
+    assert _defaults()["bench_shuffle"] == "4"
 
 
 _CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"

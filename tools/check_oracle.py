@@ -5,11 +5,7 @@ Runs every ``queries()`` entry from ``__spark_entry__`` against its
 row count, column names, and an order-insensitive value hash (columns
 sorted by name, rows sorted, values stringified with float rounding).
 
-Usage: python tools/check_oracle.py [--queued] [sf_dir] [query ...]
-
-``--queued`` checks the ROUND-6 GATE QUEUE
-(``__spark_entry__.queued_queries`` — implemented but not yet
-registered) instead of the registered set.
+Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -57,9 +53,6 @@ def value_hash(rows: list[tuple], colnames: list[str]) -> str:
 
 def main() -> int:
     args = sys.argv[1:]
-    queued = "--queued" in args
-    if queued:
-        args.remove("--queued")
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -88,7 +81,7 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entrymod.queued_queries() if queued else entrymod.queries()
+    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     ran = 0

@@ -236,7 +236,7 @@ def main() -> None:
     from biometric_stream_processing_spark.session import get_spark
 
     spark = get_spark("dump-plans")
-    qs = {**entrymod.queries(), **entrymod.queued_queries()}
+    qs = entrymod.queries()
 
     out = [
         "# PLANS — annotated physical plans for the headline queries",

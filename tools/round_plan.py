@@ -43,10 +43,10 @@ def main() -> int:
     if not rounds:
         print("no recorded rounds — everything is first-verdict debt")
         return 0
-    n_total = gr._n_total()
+    n_total = len(names)
     k = gr._k_window(n_total)
     recorded = sorted(rounds)
-    print(f"registered+queued: {n_total}  GATE_CAP: {gr.GATE_CAP}  "
+    print(f"registered: {n_total}  GATE_CAP: {gr.GATE_CAP}  "
           f"K = ceil(N/CAP) = {k}")
     print(f"recorded rounds: {recorded}  "
           f"current window: {recorded[-k:]}")
@@ -106,7 +106,7 @@ def main() -> int:
         # gate order: oldest-debt block first, each block in its
         # last-green round's CORRECTNESS key order (registration
         # order of that round — the order bench comparability
-        # depends on); never-verified entries (queue) last, in
+        # depends on); never-verified entries last, in
         # registration order
         def sort_key(n):
             g = last_green[n]
